@@ -171,9 +171,19 @@ object Queries5 {
     }
   }
 
-  private def testFiles: Seq[Path] = {
-    val tests = Paths.get(suiteRoot, "tests")
-    val s = Files.walk(tests)
+  /** `<root>/tests`, or a typed error naming it when the suite checkout is
+    * absent (the same failure [[SuiteRunner.run]] reports for an empty tree).
+    */
+  private def testsDir(root: String): Path = {
+    val tests = Paths.get(root, "tests")
+    if (!Files.isDirectory(tests))
+      throw SpecError(root, s"no suite tests directory at $tests — is the " +
+        "reference checkout present?")
+    tests
+  }
+
+  private def testFiles(root: String): Seq[Path] = {
+    val s = Files.walk(testsDir(root))
     try s.iterator().asScala.filter(_.toString.endsWith(".json"))
       .toVector.sortBy(_.toString)
     finally s.close()
@@ -182,9 +192,14 @@ object Queries5 {
   /** (relative file, group index, group description, schema JSON,
     * per-test (data JSON, expected valid)).
     */
-  def suiteGroups: Seq[(String, Int, String, String, Vector[(String, Boolean)])] = {
-    val tests = Paths.get(suiteRoot, "tests")
-    testFiles.flatMap { f =>
+  def suiteGroups: Seq[(String, Int, String, String, Vector[(String, Boolean)])] =
+    suiteGroups(suiteRoot)
+
+  /** [[suiteGroups]] of the suite tree at `root`. */
+  private[graft] def suiteGroups(root: String)
+      : Seq[(String, Int, String, String, Vector[(String, Boolean)])] = {
+    val tests = testsDir(root)
+    testFiles(root).flatMap { f =>
       val rel = tests.relativize(f).toString
       mapper.readTree(f.toFile).asScala.zipWithIndex.map { case (g, gi) =>
         (rel, gi, g.get("description").asText(), g.get("schema").toString,
@@ -206,23 +221,43 @@ object Queries5 {
   /** The whole suite as one DataFrame: (file, grp, idx, valid) — computed
     * verdicts, to be hash-compared against [[sqlRefSuite]]'s expected rows.
     */
-  def qRefSuite(spark: SparkSession, dir: String): DataFrame = {
+  def qRefSuite(spark: SparkSession, dir: String): DataFrame =
+    suiteVerdicts(spark, suiteRoot)
+
+  /** [[qRefSuite]] over the suite tree at `root`; a missing or empty tree is
+    * a typed [[SpecError]], never a vacuous zero-row result.
+    */
+  private[graft] def suiteVerdicts(spark: SparkSession, root: String): DataFrame = {
     registerRemotes()
-    val parts = suiteGroups.map { case (rel, gi, _, schemaJson, tests) =>
+    val parts = suiteGroups(root).map { case (rel, gi, _, schemaJson, tests) =>
       verdictFrame(spark, schemaJson, tests.map(_._1))
         .select(lit(rel).as("file"), lit(gi).as("grp"), col("idx"), col("valid"))
     }
+    if (parts.isEmpty)
+      throw SpecError(root, s"no suite test files found under $root/tests")
     parts.reduce(_ unionAll _).orderBy("file", "grp", "idx")
   }
 
-  /** Oracle: the suite's own expected verdicts as literal rows. */
-  def sqlRefSuite: String = {
-    val rows = suiteGroups.flatMap { case (rel, gi, _, _, tests) =>
+  /** Oracle: the suite's own expected verdicts as literal rows. Read
+    * eagerly (the driver's registry holds oracle strings), so it must not
+    * throw when the suite checkout is absent: the oracle is then a zero-row
+    * query with the same columns, and [[qRefSuite]] fails on its own.
+    */
+  def sqlRefSuite: String = sqlRefSuite(suiteRoot)
+
+  /** [[sqlRefSuite]] of the suite tree at `root`. */
+  private[graft] def sqlRefSuite(root: String): String = {
+    val groups =
+      if (Files.isDirectory(Paths.get(root, "tests"))) suiteGroups(root) else Nil
+    val rows = groups.flatMap { case (rel, gi, _, _, tests) =>
       tests.zipWithIndex.map { case ((_, want), i) =>
         s"('$rel', $gi, $i, ${if (want) "TRUE" else "FALSE"})"
       }
     }
-    s"""SELECT file, grp, idx, valid
+    if (rows.isEmpty) """SELECT file, grp, idx, valid
+        FROM (VALUES ('', 0, 0, FALSE)) AS t(file, grp, idx, valid)
+        WHERE FALSE"""
+    else s"""SELECT file, grp, idx, valid
         FROM (VALUES ${rows.mkString(",\n  ")}) AS t(file, grp, idx, valid)
         ORDER BY file, grp, idx"""
   }

@@ -88,6 +88,7 @@ class CrossDocSpec extends SparkTestBase {
 
     // the reference's OWN space-named example compiles and validates its
     // example instance (jv-parity path: bare schema by file URL)
+    assumePath("/root/reference/testdata/examples/sample schema.json")
     val spec3 = Queries5.wrapSchemaUrl(
       "file:///root/reference/testdata/examples/sample schema.json")
     val df = spark.createDataFrame(Seq(

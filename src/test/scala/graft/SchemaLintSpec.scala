@@ -169,6 +169,7 @@ class SchemaLintSpec extends SparkTestBase {
     // batched through the CATALOG arm: one verdict job per draft directory,
     // per-resource dialect routing + custom-meta skips handled by the
     // walker itself (no manual skip-list)
+    assumePath(s"${Queries5.suiteRoot}/tests")
     import spark.implicits._
     val byDir = Queries5.suiteGroups.groupBy(_._1.takeWhile(_ != '/'))
     assert(byDir.keySet == Set("draft2020-12", "draft7", "draft4"))
