@@ -6,6 +6,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
+import KeywordWalker.{nameCovered, vac}
+
 /** DYNAMIC JSON validation over Spark 4 VariantType — the faithful mapping
   * of the reference's dynamically-typed instance model
   * (/root/reference/schema.go:112-129): where [[RowCompiler]] dispatches on
@@ -31,8 +33,9 @@ import org.apache.spark.sql.types.StringType
   * dynamic semantics. content* keywords apply to any runtime-string
   * instance via the same pluggable registries as the static compiler
   * (decode → mediaType → contentSchema over the decoded value,
-  * /root/reference/validator.go:468-510). unevaluated* runs the same
-  * static-lowering + runtime branch-set walkers as the typed compiler.
+  * reference validator.go:468-510). Refs, composition,
+  * dependentSchemas and unevaluated* are [[KeywordWalker]]'s, shared with
+  * the typed compiler; this object supplies the variant view.
   * Unsupported here (out-of-scope territory): nested `json`.
   */
 object DynamicJson {
@@ -98,71 +101,79 @@ object DynamicJson {
           try_variant_get(v, "$", "float")))
       .otherwise(to_json(v))
 
-  /** missing values are vacuous for every keyword (absent property —
-    * subschema not applied, validator.go semantics); a type-gated core
-    * passes vacuously for other types.
-    */
-  private def vac(v: Column, core: Column): Column =
-    when(v.isNull, lit(true)).otherwise(coalesce(core, lit(false)))
-
   def predicate(spec: Spec, node: SchemaNode, v: Column,
                 stack: List[(String, Int)] = Nil, depth: Int = 0): Column =
     compile(spec, node, v, "", stack, None, depth)
       .map(_.pred).reduceOption(_ && _).getOrElse(lit(true))
 
+  /** The variant view: runtime type dispatch per row. Every keyword of a
+    * node re-reads the runtime type and the typed extractions, so they are
+    * bound once — without binding, a 3-keyword node reads the variant 6+
+    * times per row.
+    */
+  private final class VariantView(val v: Column, binder: Option[Binder])
+      extends ValueView {
+    def b(c: Column): Column = binder.map(_.bind(c)).getOrElse(c)
+    val sv: Column = b(graft.functions.VariantTopKindExpr(v))
+    val t: Column = b(jsonTypeFrom(v, sv))
+    lazy val vNum: Column = b(asNum(v))
+    lazy val vStr: Column = b(asStr(v))
+    // exact-rational number text (shortest-repr for variant-double storage)
+    lazy val vCanon: Column = b(numCanon(v, sv))
+    lazy val arr: Column = b(asArr(v))
+    // key-enumerating object keywords: variant exposes no native key list,
+    // so the object is re-serialized ONCE (bound) and re-parsed as
+    // map<string,variant> — values stay variant, so subschemas keep full
+    // dynamic semantics. Non-objects parse to NULL → type-gated vacuous.
+    lazy val asMap: Column = b(from_json(to_json(v),
+      org.apache.spark.sql.types.DataType.fromDDL("map<string, variant>")))
+
+    // bracket-quoted variant paths: a key containing '.' must not navigate
+    // nested objects ($['a.b'], not $.a.b). Spark's variant path grammar
+    // has NO escape inside quoted segments ([^']* / [^"]*), so pick the
+    // quote the key does not contain; a key containing BOTH quote kinds is
+    // unaddressable by any path and routes through the map view instead.
+    // CAVEAT (both-quotes keys only): the map view round-trips through
+    // to_json → from_json, which can change a number's variant STORAGE
+    // class (e.g. FLOAT → DECIMAL/DOUBLE) — const/uniqueItems canon on
+    // such a child can diverge from direct path extraction for native
+    // variant columns; parse_json-produced variants are unaffected.
+    def propGet(k: String): Column =
+      if (!k.contains("'"))
+        try_variant_get(v, "$['" + k + "']", "variant")
+      else if (!k.contains("\""))
+        try_variant_get(v, "$[\"" + k + "\"]", "variant")
+      else
+        when(t === "object", try_element_at(
+          from_json(to_json(v),
+            org.apache.spark.sql.types.DataType.fromDDL("map<string, variant>")),
+          lit(k)))
+
+    def compile(spec: Spec, node: SchemaNode, instPath: String,
+        stack: List[(String, Int)], binder: Option[Binder], depth: Int): Seq[Check] =
+      DynamicJson.compile(spec, node, v, instPath, stack, binder, depth)
+    def gate(jsonType: String, core: Column): Column =
+      vac(v, (t =!= jsonType) || coalesce(core, lit(false)))
+    def items: Column = arr
+    def entries: Column = asMap
+    def memberPredicate(spec: Spec, node: SchemaNode, x: Column,
+        stack: List[(String, Int)], depth: Int): Column =
+      predicate(spec, node, x, stack, depth)
+    def keyPresent(k: String): Column = (t === "object") && propGet(k).isNotNull
+    def oneOfDetail: String = " matched, want exactly 1"
+    // the if-predicate feeds EVERY then/else check — without binding, the
+    // whole if-subschema tree re-evaluates once per emitted check
+    def bindsIf: Boolean = true
+  }
+
   def compile(spec: Spec, node: SchemaNode, v: Column,
               instPath: String, stack: List[(String, Int)] = Nil,
               binder: Option[Binder] = None, depth: Int = 0): Seq[Check] = {
-    // bind-once views: every keyword of this node re-reads the runtime type
-    // and the typed extraction, so without binding a 3-keyword node reads
-    // the variant 6+ times per row
-    def b(c: Column): Column = binder.map(_.bind(c)).getOrElse(c)
-    val sv = b(graft.functions.VariantTopKindExpr(v))
-    val t = b(jsonTypeFrom(v, sv))
-    lazy val vNum = b(asNum(v))
-    lazy val vStr = b(asStr(v))
-    // exact-rational number text (shortest-repr for variant-double storage)
-    lazy val vCanon = b(numCanon(v, sv))
-    val kwBase = if (node.path.isEmpty) "" else node.path.mkString("/")
-    CompileLimits.tickVisit(if (kwBase.isEmpty) "#" else kwBase)
-    def kw(parts: String*): String =
-      (if (kwBase.isEmpty) parts else Vector(kwBase) ++ parts).mkString("/")
-    val out = Vector.newBuilder[Check]
-    def add(kwPath: String, pred: Column, detail: Column,
-            kind: ErrorKind): Unit =
-      out += Check(kwPath, instPath, pred, detail, kind)
-
-    node.boolSchema match {
-      case Some(false) =>
-        add(kwBase, vac(v, lit(false)), lit("false schema: always fails"),
-          ErrorKind.FalseSchema)
-        return out.result()
-      case Some(true) => return Vector.empty
-      case None       =>
-    }
-
-    // $ref / $dynamicRef — compile-time inlining with bounded unroll for
-    // recursive descent (see RowCompiler / Refs for the stack discipline)
-    def inlineRef(r: String, key: String, kwName: String,
-                  target: => SchemaNode): Unit = {
-      if (stack.contains((key, depth)))
-        throw SpecError(kw(kwName), s"cyclic $$ref chain: " +
-          (key :: stack.map(_._1)).reverse.mkString(" -> "))
-      val unroll = CompileLimits.effectiveUnroll
-      if (stack.count(_._1 == key) >= unroll)
-        add(kw(kwName), v.isNull,
-          lit(s"$kwName: recursive schema '$r' unrolled $unroll deep; " +
-            "value present beyond the compiled depth"),
-          ErrorKind.DepthExceeded(unroll))
-      else
-        out ++= compile(spec, target, v, instPath,
-          (key, depth) :: stack, binder, depth)
-    }
-    node.ref.foreach { r => inlineRef(r, r, "$ref", spec.resolve(r, Nil)) }
-    node.dynRef.foreach { r =>
-      val (target, key) = Refs.resolveDynamic(spec, r, stack, kw("$dynamicRef"))
-      inlineRef(r, key, "$dynamicRef", target)
-    }
+    val x = new VariantView(v, binder)
+    val w = new KeywordWalker(spec, node, x, instPath, stack, binder, depth)
+    import w.{add, kw, out}
+    import x.{arr, asMap, b, propGet, t, vCanon, vNum, vStr}
+    if (!w.enter()) return w.result
 
     // type — runtime dispatch; integer = number with zero fraction
     node.types.foreach { ts =>
@@ -288,13 +299,10 @@ object DynamicJson {
       }
     }
 
-    // array keywords over array<variant> — bound once when any array
-    // keyword is present
-    lazy val arr = b(asArr(v))
+    // array keywords over array<variant>
     def arrCheck(name: String, core: Column, detail: Column,
                  kind: ErrorKind): Unit =
-      add(kw(name), vac(v, (t =!= "array") || coalesce(core, lit(false))),
-        detail, kind)
+      add(kw(name), x.gate("array", core), detail, kind)
     node.minItems.foreach(n => arrCheck("minItems", size(arr) >= n,
       concat(lit("minItems: got "), size(arr).cast(StringType), lit(s", want >= $n")),
       ErrorKind.MinItems(n)))
@@ -350,27 +358,6 @@ object DynamicJson {
         ErrorKind.ContainsK(minC, node.maxContains))
     }
 
-    // object keywords via variant path extraction
-    // bracket-quoted paths: a key containing '.' must not navigate nested
-    // objects ($['a.b'], not $.a.b). Spark's variant path grammar has NO
-    // escape inside quoted segments ([^']* / [^"]*), so pick the quote the
-    // key does not contain; a key containing BOTH quote kinds is
-    // unaddressable by any path and routes through the map view instead.
-    // CAVEAT (both-quotes keys only): the map view round-trips through
-    // to_json → from_json, which can change a number's variant STORAGE
-    // class (e.g. FLOAT → DECIMAL/DOUBLE) — const/uniqueItems canon on
-    // such a child can diverge from direct path extraction for native
-    // variant columns; parse_json-produced variants are unaffected.
-    def propGet(k: String): Column =
-      if (!k.contains("'"))
-        try_variant_get(v, "$['" + k + "']", "variant")
-      else if (!k.contains("\""))
-        try_variant_get(v, "$[\"" + k + "\"]", "variant")
-      else
-        when(t === "object", try_element_at(
-          from_json(to_json(v),
-            org.apache.spark.sql.types.DataType.fromDDL("map<string, variant>")),
-          lit(k)))
     node.requiredProps.foreach { k =>
       add(kw("required"),
         vac(v, (t =!= "object") || propGet(k).isNotNull),
@@ -384,13 +371,7 @@ object DynamicJson {
       out ++= compile(spec, ps, child,
         if (instPath.isEmpty) k else s"$instPath/$k", stack, binder, depth + 1)
     }
-    node.dependentSchemas.foreach { case (k, ds) =>
-      val present = (t === "object") &&
-        propGet(k).isNotNull
-      compile(spec, ds, v, instPath, stack, binder, depth).foreach { c =>
-        out += c.copy(pred = !coalesce(present, lit(false)) || c.pred)
-      }
-    }
+    w.dependentSchemas()
     node.dependentRequired.foreach { case (k, reqs) =>
       val present = propGet(k).isNotNull
       val core = reqs.map(r => propGet(r).isNotNull)
@@ -401,16 +382,10 @@ object DynamicJson {
         ErrorKind.DependentRequiredK(k, reqs))
     }
 
-    // key-enumerating object keywords: variant exposes no native key list,
-    // so the object is re-serialized ONCE (bound) and re-parsed as
-    // map<string,variant> — values stay variant, so subschemas keep full
-    // dynamic semantics. Non-objects parse to NULL → type-gated vacuous.
-    lazy val asMap = b(from_json(to_json(v),
-      org.apache.spark.sql.types.DataType.fromDDL("map<string, variant>")))
+    // key-enumerating object keywords over the bound map view
     def objCheck(name: String, core: Column, detail: Column,
                  kind: ErrorKind): Unit =
-      add(kw(name), vac(v, (t =!= "object") || coalesce(core, lit(false))),
-        detail, kind)
+      add(kw(name), x.gate("object", core), detail, kind)
     node.minProperties.foreach(n =>
       objCheck("minProperties", size(map_keys(asMap)) >= n,
         concat(lit("minProperties: got "), size(map_keys(asMap)).cast(StringType),
@@ -439,7 +414,7 @@ object DynamicJson {
         ErrorKind.PatternPropertiesK(re))
     }
     node.additionalProperties.foreach { ap =>
-      def isKnown(k: Column): Column = RowCompiler.nameCovered(k,
+      def isKnown(k: Column): Column = nameCovered(k,
         node.properties.map(_._1), node.patternProperties.map(_._1))
       ap match {
         case Left(true) =>
@@ -532,176 +507,10 @@ object DynamicJson {
       throw SpecError(kw("json"), "'json' is not supported in dynamic (variant) mode")
     }
 
-    // unevaluated* — the SAME static/runtime evaluated-set walkers as the
-    // typed compiler (RowCompiler), with branch predicates compiled by THIS
-    // dynamic compiler; lowering runs over the bound asMap / arr frames
-    def dynBranchPred(ch: SchemaNode): Column =
-      coalesce(predicate(spec, ch, v, stack, depth), lit(false))
-    node.unevaluatedItems.filter(_ != Left(true)).foreach { ui =>
-      def lowerStaticItems(maxPrefix: Int, containsNodes: Vector[SchemaNode]): Unit = {
-        def contained(x: Column): Column = containsNodes
-          .map(cn => coalesce(predicate(spec, cn, x, stack, depth + 1), lit(false)))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        lazy val rest = if (maxPrefix == 0) arr
-          else slice(arr, lit(maxPrefix + 1), greatest(size(arr) - maxPrefix, lit(0)))
-        ui match {
-          case Left(true) =>
-          case Left(false) if containsNodes.isEmpty =>
-            arrCheck("unevaluatedItems", size(arr) <= maxPrefix,
-              concat(lit("unevaluatedItems: got "), size(arr).cast(StringType),
-                lit(s" item(s), want <= $maxPrefix evaluated")),
-              ErrorKind.UnevaluatedItemsK)
-          case Left(false) =>
-            arrCheck("unevaluatedItems", forall(rest, x => contained(x)),
-              lit("unevaluatedItems: item(s) beyond the evaluated prefix " +
-                "match no contains schema"),
-              ErrorKind.UnevaluatedItemsK)
-          case Right(us) =>
-            arrCheck("unevaluatedItems",
-              forall(rest, x => contained(x) ||
-                coalesce(predicate(spec, us, x, stack, depth + 1), lit(false))),
-              lit("unevaluatedItems: element(s) do not match"),
-              ErrorKind.UnevaluatedItemsK)
-        }
-      }
-      try {
-        val (maxPrefix, allEval, containsNodes) =
-          RowCompiler.staticEvaluatedItems(spec, node, kw("unevaluatedItems"), stack)
-        if (!allEval) lowerStaticItems(maxPrefix, containsNodes)
-      } catch { case _: RowCompiler.RuntimeEvalSet =>
-        val (contribs0, contains0) = RowCompiler.evaluatedItemsContributions(
-          spec, node, kw("unevaluatedItems"), dynBranchPred, _ => lit(false), stack)
-        val contribs = contribs0.map(c =>
-          if (c._2) c else (b(c._1), c._2, c._3, c._4))
-        val containsC = contains0.map(c =>
-          if (c._2) c else (b(c._1), c._2, c._3))
-        def containedRt(x: Column): Column = containsC.map { case (cond, uncond, cn) =>
-          val m = coalesce(predicate(spec, cn, x, stack, depth + 1), lit(false))
-          if (uncond) m else cond && m
-        }.reduceOption(_ || _).getOrElse(lit(false))
-        if (!contribs.exists(c => c._2 && c._4)) {
-          val allEvalCond = contribs.filter(_._4).map(_._1)
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val prefixCol = greatest(
-            (lit(0) +: contribs.filter(_._3 > 0).map { c =>
-              if (c._2) lit(c._3) else when(c._1, lit(c._3)).otherwise(lit(0))
-            }): _*)
-          lazy val rest = slice(arr, prefixCol + 1,
-            greatest(size(arr) - prefixCol, lit(0)))
-          ui match {
-            case Left(true) =>
-            case Left(false) if containsC.isEmpty =>
-              arrCheck("unevaluatedItems",
-                coalesce(allEvalCond, lit(false)) || size(arr) <= prefixCol,
-                concat(lit("unevaluatedItems: got "), size(arr).cast(StringType),
-                  lit(" item(s), more than the evaluated prefix")),
-                ErrorKind.UnevaluatedItemsK)
-            case Left(false) =>
-              arrCheck("unevaluatedItems",
-                coalesce(allEvalCond, lit(false)) ||
-                  coalesce(forall(rest, x => containedRt(x)), lit(false)),
-                lit("unevaluatedItems: item(s) beyond the evaluated prefix " +
-                  "match no applicable contains schema"),
-                ErrorKind.UnevaluatedItemsK)
-            case Right(us) =>
-              arrCheck("unevaluatedItems",
-                coalesce(allEvalCond, lit(false)) ||
-                  coalesce(forall(rest, x => containedRt(x) ||
-                    coalesce(predicate(spec, us, x, stack, depth + 1),
-                      lit(false))), lit(false)),
-                lit("unevaluatedItems: element(s) do not match"),
-                ErrorKind.UnevaluatedItemsK)
-          }
-        }
-      }
-    }
-    node.unevaluatedProperties.filter(_ != Left(true)).foreach { up =>
-      def lowerProps(isEval: Column => Column): Unit = up match {
-        case Left(true) =>
-        case Left(false) =>
-          objCheck("unevaluatedProperties",
-            forall(map_keys(asMap), k => coalesce(isEval(k), lit(false))),
-            lit("unevaluatedProperties: unexpected key(s)"),
-            ErrorKind.UnevaluatedPropertiesK)
-        case Right(us) =>
-          val rem = map_filter(asMap, (k, _) => !coalesce(isEval(k), lit(false)))
-          objCheck("unevaluatedProperties",
-            forall(map_values(rem), x =>
-              coalesce(predicate(spec, us, x, stack, depth + 1), lit(false))),
-            lit("unevaluatedProperties: unevaluated value(s) do not match"),
-            ErrorKind.UnevaluatedPropertiesK)
-      }
-      try {
-        val (evalKeys, evalPats, allEval) =
-          RowCompiler.staticEvaluatedProps(spec, node, kw("unevaluatedProperties"), stack)
-        if (!allEval) lowerProps(k => RowCompiler.nameCovered(k, evalKeys, evalPats))
-      } catch { case _: RowCompiler.RuntimeEvalSet =>
-        val contribs0 = RowCompiler.evaluatedPropsContributions(spec, node,
-          kw("unevaluatedProperties"), dynBranchPred,
-          k => (t === "object") &&
-            propGet(k).isNotNull, stack)
-        val contribs = contribs0.map(c =>
-          if (c.unconditional) c else c.copy(cond = b(c.cond)))
-        if (!contribs.exists(c => c.unconditional && c.allEval))
-          lowerProps { k =>
-            contribs.map { c =>
-              if (c.allEval) c.cond
-              else if (c.unconditional) RowCompiler.nameCovered(k, c.keys, c.patterns)
-              else c.cond && RowCompiler.nameCovered(k, c.keys, c.patterns)
-            }.reduceOption(_ || _).getOrElse(lit(false))
-          }
-      }
-    }
-
-    // composition — same algebra, dynamic predicates
-    node.allOf.foreach(ch => out ++= compile(spec, ch, v, instPath, stack, binder, depth))
-    if (node.anyOf.nonEmpty) {
-      val ps = node.anyOf.map(ch => predicate(spec, ch, v, stack, depth))
-      add(kw("anyOf"), vac(v, ps.reduce(_ || _)), lit("anyOf: no subschema matched"),
-        ErrorKind.AnyOfK)
-    }
-    if (node.oneOf.nonEmpty) {
-      val cnt = node.oneOf
-        .map(ch => when(coalesce(predicate(spec, ch, v, stack, depth), lit(false)), 1).otherwise(0))
-        .reduce(_ + _)
-      add(kw("oneOf"), vac(v, cnt === 1),
-        concat(lit("oneOf: "), cnt.cast(StringType), lit(" matched, want exactly 1")),
-        ErrorKind.OneOfK(node.oneOf.size))
-    }
-    node.not.foreach { ch =>
-      add(kw("not"), vac(v, !coalesce(predicate(spec, ch, v, stack, depth), lit(false))),
-        lit("not: subschema matched"),
-        ErrorKind.NotK)
-    }
-    node.ifS.foreach { ifn =>
-      ifn.boolSchema match {
-        // literal-if pruning: the dead branch is never compiled, so an
-        // unresolvable $ref inside it is never touched (the reference skips
-        // the dead branch the same way — Extra-Test-Suite
-        // draft7/if-then-else.json refs 'blah/blah.json' in skipped branches)
-        case Some(true) => node.thenS.foreach { tn =>
-          out ++= compile(spec, tn, v, instPath, stack, binder, depth)
-        }
-        case Some(false) => node.elseS.foreach { en =>
-          out ++= compile(spec, en, v, instPath, stack, binder, depth)
-        }
-        case None =>
-          // bind: the if-predicate feeds EVERY then/else check — without
-          // this the whole if-subschema tree (schema_of_variant traversals
-          // included) re-evaluates once per emitted check
-          val ifPred = b(coalesce(predicate(spec, ifn, v, stack, depth), lit(false)))
-          node.thenS.foreach { tn =>
-            compile(spec, tn, v, instPath, stack, binder, depth)
-              .foreach(c => out += c.copy(pred = !ifPred || c.pred))
-          }
-          node.elseS.foreach { en =>
-            compile(spec, en, v, instPath, stack, binder, depth)
-              .foreach(c => out += c.copy(pred = ifPred || c.pred))
-          }
-      }
-    }
-
-    out.result()
+    w.unevaluatedItems()
+    w.unevaluatedProperties()
+    w.composition()
+    w.result
   }
 
   /** Validate a STRING column holding arbitrary JSON against a schema node,

@@ -90,6 +90,9 @@ object ShinglesExpr {
   */
 case class BandMinsExpr(child: Expression, numBands: Int, engine: String)
     extends UnaryExpression {
+  // checked at plan build: `engine` is also spliced into generated code
+  require(engine == "md5" || engine == "xxhash64",
+    s"unknown minhash hash engine '$engine' (md5 | xxhash64)")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullable: Boolean = child.nullable
@@ -201,8 +204,10 @@ object BandMinsExpr {
   * in the exact-Jaccard verification: both `array_intersect` and `filter`
   * are interpreted (no codegen) and materialize an intermediate result
   * array per candidate pair, when the verification only needs the COUNT.
-  * For element-distinct inputs (shingle sets are) the count equals
-  * |A ∩ B| over non-null elements — exactly the old expression.
+  * PRECONDITION: both arrays are element-distinct (shingle sets are by
+  * construction). The count then equals |A ∩ B| over non-null elements —
+  * exactly the old expression. With duplicates it overcounts: for a = [x],
+  * b = [x, x] it returns 2 where `size(array_intersect(a, b))` returns 1.
   */
 case class IntersectCountExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {

@@ -76,6 +76,10 @@ object VariantTopKindExpr {
       case VariantUtil.Type.FLOAT => FLOAT
       case VariantUtil.Type.BINARY => BINARY
       case VariantUtil.Type.UUID => UUID
+      // a storage type this Spark version added: name it instead of a
+      // bare MatchError from generated code
+      case other => throw new UnsupportedOperationException(
+        s"variant storage type $other has no JSON kind mapping")
     }
 
   def apply(c: Column): Column =

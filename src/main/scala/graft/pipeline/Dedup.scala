@@ -326,19 +326,6 @@ object Dedup {
         }.reduce(_ + _).as("simhash"))
   }
 
-  /** Near-dup pairs by identical 16-bit SimHash code. NOT a scale operator:
-    * 16 bits = 65,536 buckets, so at 10^12 rows every bucket is a mega-bucket
-    * and the self-join goes quadratic. Kept as the cheap small-corpus arm;
-    * the scale path is [[simhash64]] + [[simhashNearDup64]] (banded Hamming
-    * join over 2^64 codes).
-    */
-  def simhashDupes(df: DataFrame, keyCol: String, textCol: String): DataFrame = {
-    val sh = simhash16(df, keyCol, textCol)
-    sh.as("x").join(sh.as("y"),
-        col("x.simhash") === col("y.simhash") && col("x.k") < col("y.k"))
-      .select(col("x.k").as("a"), col("y.k").as("b"), col("x.simhash"))
-  }
-
   /** 64-bit SimHash: bit b (0-based) is the sign of the token-weighted sum
     * of bit (b%4) of hex digit (b/4 + 1) of md5(token) — i.e. the md5 hash
     * is consumed 4 bits per hex digit, giving a full 64-bit fingerprint that
@@ -541,15 +528,6 @@ object Dedup {
     }
     var iter = 0
     var converged = false
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    def dbg(msg: => String): Unit = if (ccDebug)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"[cc] $msg")
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (ccDebug) {
-      val now = System.nanoTime()
-      dbg(f"$label: ${(now - tMark) / 1e9}%.3f s")
-      tMark = now
-    }
     try {
     while (!converged && iter < maxIter) {
       // neighbor labels flow along edges; keep own label in the pool,
@@ -634,19 +612,10 @@ object Dedup {
       // default-stats cut as the old `jumped.rdd` + createDataFrame route,
       // WITHOUT the per-row UnsafeRow→Row→UnsafeRow conversion that route
       // pays every round (boxing every field of every vertex row twice)
-      mark(s"round $iter plan build")
-      if (ccDebug) {
-        // debug-only phase actions: materialize each persisted layer
-        // separately so the straggler phase is attributable
-        val ne = edges.count(); mark(s"round $iter edges ($ne)")
-        val nl = labels.count(); mark(s"round $iter labels ($nl)")
-        val nh = hooked.count(); mark(s"round $iter hooked ($nh)")
-      }
       val (next, nextRdd) =
         org.apache.spark.sql.GraftInternalRows.cutLineage(jumped, roundLevel)
       curRdd = Some(nextRdd) // tracked for failure-path cleanup of the count
       val changed = next.filter(col("comp") =!= col("__old")).count()
-      mark(s"round $iter action (changed=$changed)")
       if (storage != StorageLevel.NONE) cached.unpersist()
       prevRdd.foreach(_.unpersist())
       if (storage != StorageLevel.NONE) { propP.unpersist(); hooked.unpersist() }
@@ -673,7 +642,6 @@ object Dedup {
       prevRdd.foreach(_.unpersist()); prevRdd = None
       labels = out
     }
-    mark("final hand-back")
     if (storage != StorageLevel.NONE) pairsP.unpersist()
     (labels, iter)
     } catch { case t: Throwable => cleanupAll(); throw t }

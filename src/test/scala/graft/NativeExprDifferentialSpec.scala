@@ -55,6 +55,17 @@ class NativeExprDifferentialSpec extends SparkTestBase {
     }
   }
 
+  test("BandMinsExpr rejects an unknown engine at construction, before any job runs") {
+    val df = texts.toDF("t").select(pipeline.Dedup.shingles(col("t"), 3).as("sh"))
+    val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+    Seq("sha1", "md5\"", "").foreach { engine =>
+      val e = intercept[IllegalArgumentException](
+        df.select(BandMinsExpr(col("sh"), 4, engine)))
+      assert(e.getMessage.contains(s"unknown minhash hash engine '$engine'"))
+    }
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(null).length == jobsBefore)
+  }
+
   test("IntersectCountExpr ≡ size(filter(array_intersect, notNull))") {
     val pairs = Seq(
       (Seq("a", "b", "c"), Seq("b", "c", "d")),
