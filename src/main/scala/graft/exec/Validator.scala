@@ -1,8 +1,14 @@
 package graft.exec
 
+import com.google.common.collect.MapMaker
 import graft.compile.{Check, CompiledSuite}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Row-level execution of a compiled suite — one fused, WholeStageCodegen'd
   * pass over the table, in one of two modes mirroring the reference's
@@ -20,6 +26,10 @@ import org.apache.spark.sql.functions._
   * the scan, and no shuffle is introduced. At 100 TB this pass is
   * scan-bound — the plan must never read columns the spec doesn't mention
   * (verified in tests via the scan's ReadSchema).
+  *
+  * [[localViolations]] is violation mode for a handful of rows on the
+  * driver: the same optimized projection, bound once per suite and session,
+  * evaluated without a Dataset or a job (single-document meta-gates).
   */
 object Validator {
 
@@ -136,5 +146,89 @@ object Validator {
       sum(when(col("valid"), 0L).otherwise(1L)).as("invalid_rows"),
       sum(size(col("violations")).cast("long")).as("violations"),
       (sum(when(col("valid"), 0L).otherwise(1L)) === 0).as("valid"))
+  }
+
+  /** Output schema of [[violations]] (and of [[localViolations]]' rows):
+    * the key columns as declared in `inputSchema`, then nullable
+    * `keyword`, `instance_path`, `detail` strings.
+    */
+  def violationsSchema(inputSchema: StructType, keyCols: Seq[String]): StructType =
+    StructType(keyCols.map(inputSchema(_)) ++
+      Seq("keyword", "instance_path", "detail").map(StructField(_, StringType)))
+
+  /** [[violations]] for a few rows, evaluated on the driver: no Dataset,
+    * no analysis and no Spark job per call. `rows` follow `inputSchema`;
+    * the result rows follow [[violationsSchema]], in input-row then
+    * check order. The violations projection is the optimized plan of
+    * [[annotate]] over an empty leaf (so `RuntimeReplaceable` expressions
+    * are already replaced), bound once per suite and session and evaluated
+    * under that session's conf — the very expressions the distributed path
+    * runs.
+    */
+  def localViolations(spark: SparkSession, suite: CompiledSuite,
+                      inputSchema: StructType, rows: Seq[Row],
+                      keyCols: Seq[String]): Seq[Row] = {
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    SQLConf.withExistingConf(conf) {
+      val bound = boundSuites
+        .computeIfAbsent(suite, _ => new MapMaker().weakKeys().makeMap())
+        .computeIfAbsent(spark, _ => new BoundViolations(spark, suite, inputSchema))
+      require(bound.inputSchema == inputSchema,
+        s"suite was bound over ${bound.inputSchema.simpleString}, " +
+          s"not ${inputSchema.simpleString}")
+      val keyIdx = keyCols.map(inputSchema.fieldIndex)
+      bound(rows, keyIdx)
+    }
+  }
+
+  // suite → session → bound projection; weak identity keys on both levels,
+  // so the cache never outlives (or frees anything of) a suite or session
+  private val boundSuites = new MapMaker().weakKeys()
+    .makeMap[CompiledSuite, java.util.concurrent.ConcurrentMap[SparkSession, BoundViolations]]()
+
+  /** The violations projection of one suite, bound to `inputSchema`: the
+    * optimized plan's `Project` chain, each bound to its child's output.
+    * Holds no reference to the suite or the session. `apply` is
+    * synchronized: the projections reuse their output buffers, and lambda
+    * variables hold per-evaluation state.
+    */
+  private final class BoundViolations(spark: SparkSession, suite: CompiledSuite,
+                                      val inputSchema: StructType) {
+    private val projections: Seq[UnsafeProjection] = {
+      val leaf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], inputSchema)
+      def chain(p: LogicalPlan): List[Project] = p match {
+        case pr: Project => pr :: chain(pr.child)
+        case _: LeafNode => Nil
+        case other => throw new IllegalStateException(
+          s"violations projection is not a Project chain: ${other.nodeName}")
+      }
+      chain(annotate(leaf, suite).select("violations").queryExecution.optimizedPlan)
+        .reverse.map { pr =>
+          val u = UnsafeProjection.create(pr.projectList, pr.child.output)
+          u.initialize(0)
+          u
+        }
+    }
+    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(inputSchema)
+
+    def apply(rows: Seq[Row], keyIdx: Seq[Int]): Seq[Row] = synchronized {
+      val out = Seq.newBuilder[Row]
+      rows.foreach { row =>
+        val res = projections.foldLeft(
+          toCatalyst(row).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])(
+          (r, p) => p(r))
+        if (!res.isNullAt(0)) {
+          val arr = res.getArray(0)
+          val keys = keyIdx.map(row.get)
+          (0 until arr.numElements()).filterNot(arr.isNullAt).foreach { i =>
+            val v = arr.getStruct(i, 3)
+            def str(f: Int) = if (v.isNullAt(f)) null else v.getUTF8String(f).toString
+            out += Row.fromSeq(keys ++ Seq(str(0), str(1), str(2)))
+          }
+        }
+      }
+      out.result()
+    }
   }
 }

@@ -21,9 +21,10 @@ import scala.jdk.CollectionConverters._
   * nodes, and EVERY node is validated — by the engine's own dynamic JSON
   * compiler — against a depth-1 node meta-spec whose nested schema positions
   * only assert "object or boolean" (each nested node appears as its own row,
-  * so nothing is left unchecked). This also makes meta-validation an ordinary
-  * DataFrame pass: validating a catalog of a million stored specs is the same
-  * plan over a million documents.
+  * so nothing is left unchecked). One spec document is validated on the
+  * driver ([[Validator.localViolations]]: the suite bound once, no Spark
+  * job per document); a catalog of a million stored specs is one DataFrame
+  * pass over the same compiled expressions.
   *
   * Division of labour: this gate catches SHAPE errors (unknown keywords,
   * ill-typed keyword values, negative lengths, empty enums, malformed anchor
@@ -58,9 +59,6 @@ object MetaSpec {
 
   private lazy val compiledSuite = SuiteCompiler.compile(spec, inputSchema)
 
-  /** Probe access to the compiled suite (diagnostics only). */
-  private[graft] def compiledSuiteForProbe = compiledSuite
-
   /** Enumerate every schema node in a spec document with its location, via
     * the shared keyword-position map ([[Spec.walkSchemaNodes]]). Non-object,
     * non-boolean children are not descended into — the parent's meta-check
@@ -81,8 +79,7 @@ object MetaSpec {
     * violations (empty = shape-valid).
     */
   def violations(spark: SparkSession, doc: JsonNode): Vector[MetaViolation] =
-    violationsFrame(spark, doc)
-      .collect()
+    localViolations(spark, doc)
       .map(r => MetaViolation(r.getString(0), r.getString(1), r.getString(3)))
       .toVector
       .sortBy(v => (v.path, v.keyword))
@@ -90,16 +87,19 @@ object MetaSpec {
   def violations(spark: SparkSession, json: String): Vector[MetaViolation] =
     violations(spark, Spec.readJsonDoc(json))
 
-  /** The raw violations frame for one document — the single definition of
-    * the meta input row shape (the gate and the diagnostics probe both go
-    * through here, so they cannot drift apart).
+  /** (path, keyword, instance_path, detail) rows for one document, on the
+    * driver — the single definition of the meta input row shape.
     */
-  def violationsFrame(spark: SparkSession, doc: JsonNode): org.apache.spark.sql.DataFrame = {
+  private def localViolations(spark: SparkSession, doc: JsonNode): Seq[Row] = {
     val rows: Seq[Row] = Row("#", doc.toString, null) +:
       schemaNodes(doc).map { case (p, n) => Row(p, null, n.toString) }
-    val df = spark.createDataFrame(rows.asJava, inputSchema)
-    Validator.violations(df, compiledSuite, Seq("path"))
+    Validator.localViolations(spark, compiledSuite, inputSchema, rows, Seq("path"))
   }
+
+  /** The raw violations frame for one document (local, over the rows). */
+  def violationsFrame(spark: SparkSession, doc: JsonNode): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(localViolations(spark, doc).asJava,
+      Validator.violationsSchema(inputSchema, Seq("path")))
 
   def violationsFrame(spark: SparkSession, json: String): org.apache.spark.sql.DataFrame =
     violationsFrame(spark, Spec.readJsonDoc(json))

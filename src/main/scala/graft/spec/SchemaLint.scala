@@ -26,8 +26,11 @@ import scala.jdk.CollectionConverters._
   * walker enumerates every subschema node of the validated document (the
   * reference's per-draft `subschemas` position lists, draft.go:26-110) as
   * its own row. Every node is then validated by the engine's dynamic JSON
-  * compiler against the flat meta — an ordinary DataFrame pass, so linting
-  * a catalog of a million stored schemas is one job, and nothing recurses.
+  * compiler against the flat meta, and nothing recurses. One document is
+  * evaluated on the driver ([[graft.exec.Validator.localViolations]]: the
+  * meta-suite bound once, no Spark job per document); a catalog of a
+  * million stored schemas is one DataFrame pass over the same compiled
+  * expressions.
   *
   * Format assertions are ON here (the reference compiles its built-in metas
   * with AssertFormat, draft.go:127-130), so `$id: "not a uri"` fails
@@ -521,15 +524,12 @@ object SchemaLint {
   private def inlineUrl(json: String): String =
     "inline+json:" + json.replace("%", "%25").replace("#", "%23")
 
-  /** Flat node-meta suite for a draft (+ its inline document URL, for
-    * stripping reported keyword paths), compiled once per JVM. Parsed in
+  /** Flat node-meta suite (+ its inline document URL, for stripping
+    * reported keyword paths), compiled once per JVM. Parsed in
     * reference-compat mode with format assertions ON and content* OFF —
     * exactly how the reference compiles its built-in metas
     * (draft.go:127-130; content has no assertion there either).
     */
-  private[graft] def suiteFor(version: Int): (CompiledSuite, String) =
-    suiteCache.getOrElseUpdate(version, compileNodeMeta(combinedNodeMeta(version)))
-
   private def compileNodeMeta(flatDoc: JsonNode): (CompiledSuite, String) = {
     val url = inlineUrl(flatDoc.toString)
     val wrapper = mapper.readTree(
@@ -540,43 +540,52 @@ object SchemaLint {
       inputSchema), url)
   }
 
-  /** Suite for a routing code: an official draft version or a composed
-    * custom-meta code registered by [[resolveCustomMeta]].
+  /** Suite for a routing code: an official draft version (compiled on
+    * first use) or a composed custom-meta code registered by
+    * [[resolveCustomMeta]].
     */
   private def suiteForCode(code: Int): (CompiledSuite, String) =
     if (code >= CUSTOM_BASE)
       customSuites.getOrElse(code, throw SpecError(s"code $code",
         "custom-meta suite not registered — resolveCustomMeta must run first"))
-    else suiteFor(code)
+    else suiteCache.getOrElseUpdate(code, compileNodeMeta(combinedNodeMeta(code)))
 
   /** Report coordinates relative to the META document and the LINTED
     * document: keyword paths lose the internal inline-document URL and the
     * wrapper column ('#/properties/type/anyOf'), instance paths lose the
     * wrapper column root (remaining suffix = location INSIDE the node; the
-    * node's own pointer is the `path` column).
+    * node's own pointer is the `path` column). The catalog arm's columns
+    * and the driver path's rows ([[normalizedRow]]) take the same regexes.
     */
   private def normalized(vios: DataFrame, metaUrl: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val urlQ = java.util.regex.Pattern.quote(metaUrl + "#")
-    vios.withColumn("keyword",
-        regexp_replace(regexp_replace(col("keyword"), urlQ, "#"),
-          "^columns/node/json", "#"))
+    vios.withColumn("keyword", regexp_replace(regexp_replace(col("keyword"),
+        urlPattern(metaUrl), "#"), wrapperKeyword, "#"))
       .withColumn("instance_path",
-        regexp_replace(col("instance_path"), "^node!json", ""))
+        regexp_replace(col("instance_path"), wrapperInstance, ""))
   }
+
+  private def normalizedRow(r: Row, metaUrl: String): LintViolation =
+    LintViolation(r.getString(0), r.getString(1)
+        .replaceAll(urlPattern(metaUrl), "#").replaceAll(wrapperKeyword, "#"),
+      r.getString(2).replaceAll(wrapperInstance, ""), r.getString(3))
+
+  private def urlPattern(metaUrl: String) = java.util.regex.Pattern.quote(metaUrl + "#")
+  private val (wrapperKeyword, wrapperInstance) = ("^columns/node/json", "^node!json")
 
   // --------------------------------------------------------------- running
 
-  /** Per-document node enumeration for the catalog arm (runs on executors;
-    * small-document imperative logic, validation stays compiled). Malformed
-    * JSON yields one root row whose node text fails the engine's parse
-    * check like any other violation.
-    */
-  /** Test hook: walk invocations (per document), so PlanShapeSpec can pin
-    * the one-walk-per-document catalog contract (local mode shares the JVM).
+  /** Walk invocations (per document), so PlanShapeSpec can pin the
+    * one-walk-per-document catalog contract (local mode shares the JVM).
     */
   private[graft] val enumCalls = new java.util.concurrent.atomic.AtomicLong
 
+  /** Per-document node enumeration: (path, governing draft, node text) rows,
+    * on the driver for one document and on executors for the catalog arms
+    * (small-document imperative logic, validation stays compiled).
+    * Malformed JSON yields one root row whose node text fails the engine's
+    * parse check like any other violation.
+    */
   def enumerateRows(json: String, version: Int,
                     pinned: Boolean = false,
                     customs: Map[String, Int] = Map.empty,
@@ -693,17 +702,18 @@ object SchemaLint {
     // ONE walk per document: with multiple draft branches the exploded
     // node frame is persisted, so every branch scans the same in-memory
     // blocks instead of re-running the parse+walk UDF once per draft
-    // (PlanShapeSpec pins the invocation count; graft.LintBench measures
-    // the before/after — SPARK_GRAFT_LINT_NO_CACHE restores the re-walk
-    // behavior as an ops valve for memory-starved runs). Cache lifecycle:
-    // the returned frame is lazy, so the blocks must outlive this call —
-    // each NEW catalog lint releases the previous call's cache (at most one
-    // node frame resident per process), and releaseCache() frees the last.
-    val cachedNodes =
-      versions.size > 1 && !sys.env.contains("SPARK_GRAFT_LINT_NO_CACHE")
-    val exploded = if (cachedNodes) persistTracked(exploded0) else exploded0
-    val main = perVersion(exploded, Seq(idCol, "path"),
-      pruneToPresent(exploded, versions, version, cachedNodes))
+    // (PlanShapeSpec pins the invocation count). Cache lifecycle: the
+    // returned frame is lazy, so the blocks must outlive this call — each
+    // NEW catalog lint releases the previous call's cache (at most one node
+    // frame resident per process), and releaseCache() frees the last.
+    val exploded =
+      if (versions.size > 1) persistTracked(exploded0) else exploded0
+    // per-draft branches, unioned, coordinates normalized
+    val main = pruneToPresent(exploded, versions, version).map { ver =>
+      val (suite, metaDocUrl) = suiteForCode(ver)
+      normalized(Validator.violations(exploded.filter(col("v") === ver), suite,
+        Seq(idCol, "path")), metaDocUrl)
+    }.reduce(_ unionByName _)
     if (customs.valuesIterator.contains(badMetaCode))
       main.unionByName(badMetaViolations(exploded, Seq(idCol, "path")))
     else main
@@ -716,40 +726,23 @@ object SchemaLint {
     * one or two. Row-set equivalence is trivial: a pruned branch's
     * `filter(v === ver)` selects zero rows, so it contributed nothing to the
     * union. `fallback` keeps the reduce non-empty (and the output schema
-    * well-defined) for an empty catalog. Skipped when the node frame is not
-    * cached (SPARK_GRAFT_LINT_NO_CACHE): the probe would re-run the
-    * parse+walk UDF over every document.
+    * well-defined) for an empty catalog. With more than one branch the node
+    * frame is persisted, so the probe never re-runs the parse+walk UDF.
     *
     * EAGERNESS: the probe materializes the (persisted) node frame at call
     * time — acceptable for catalog linting, whose caller always executes
-    * the full result; a caller that only wants a lazily-limited slice
-    * should set SPARK_GRAFT_LINT_NO_CACHE to keep the old fully-lazy
-    * all-branches plan.
+    * the full result.
     */
   private def pruneToPresent(exploded: DataFrame, versions: Vector[Int],
-                             fallback: Int, cached: Boolean): Vector[Int] = {
+                             fallback: Int): Vector[Int] = {
     import org.apache.spark.sql.functions.col
-    if (!cached || versions.size <= 1) versions
+    if (versions.size <= 1) versions
     else {
       val present = exploded.select(col("v")).distinct()
         .collect().map(_.getInt(0)).toSet
       val kept = versions.filter(present)
       if (kept.isEmpty) Vector(fallback) else kept
     }
-  }
-
-  /** Validate (…, v, node) rows against each draft's flat meta, union of
-    * the per-version branches, coordinates normalized.
-    */
-  private def perVersion(rows: DataFrame, keyCols: Seq[String],
-                         versions: Vector[Int]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    versions.map { ver =>
-      val (suite, metaDocUrl) = suiteForCode(ver)
-      normalized(
-        Validator.violations(rows.filter(col("v") === ver), suite, keyCols),
-        metaDocUrl)
-    }.reduce(_ unionByName _)
   }
 
   /** Per-DOCUMENT verdicts for a catalog — (idCol, valid:boolean), one row
@@ -779,10 +772,9 @@ object SchemaLint {
                     else Vector(version)) ++
       customs.values.filter(_ >= CUSTOM_BASE).toVector.distinct
     // one walk per document — see violationsForCatalog (incl. lifecycle)
-    val cachedNodes =
-      versions.size > 1 && !sys.env.contains("SPARK_GRAFT_LINT_NO_CACHE")
-    val exploded = if (cachedNodes) persistTracked(exploded0) else exploded0
-    val kept = pruneToPresent(exploded, versions, version, cachedNodes)
+    val exploded =
+      if (versions.size > 1) persistTracked(exploded0) else exploded0
+    val kept = pruneToPresent(exploded, versions, version)
     val branches = kept.map { ver =>
       Validator.annotate(exploded.filter(col("v") === ver),
           suiteForCode(ver)._1)
@@ -802,11 +794,11 @@ object SchemaLint {
   final case class LintViolation(path: String, keyword: String,
                                  instancePath: String, detail: String)
 
-  /** Raw violation frame for one document: (path, keyword, instance_path,
-    * detail) — instance_path is the location INSIDE the node.
+  /** Lint one document on the driver: each governing draft's meta-suite
+    * evaluated over that draft's node rows, coordinates normalized.
     */
-  def violationsRaw(spark: SparkSession, schemaJson: String,
-                    metaUrl: String): DataFrame = {
+  private def lintDocument(spark: SparkSession, schemaJson: String,
+                           metaUrl: String): Seq[LintViolation] = {
     val version = draftVersion(metaUrl).getOrElse(throw SpecError(metaUrl,
       "not an official json-schema.org meta-schema URL"))
     // a CUSTOM root $schema resolves driver-side: composed vocabulary
@@ -825,11 +817,22 @@ object SchemaLint {
     val enumerated =
       enumerateRows(schemaJson, version, customs = customs,
         customWalks = walksFor(customs))
-    val rows: Seq[Row] = enumerated.map { case (p, v, n) => Row(p, v, n) }
-    val df = spark.createDataFrame(rows.asJava, inputSchema)
-    // versions present are known driver-side: only those suites compile
-    perVersion(df, Seq("path"), enumerated.map(_._2).distinct.toVector)
+    // versions present are known driver-side: only those suites run
+    enumerated.map(_._2).distinct.flatMap { ver =>
+      val (suite, metaDocUrl) = suiteForCode(ver)
+      val rows = enumerated.collect { case (p, v, n) if v == ver => Row(p, v, n) }
+      Validator.localViolations(spark, suite, inputSchema, rows, Seq("path"))
+        .map(normalizedRow(_, metaDocUrl))
+    }
   }
+
+  /** Raw violation frame (local) for one document: (path, keyword,
+    * instance_path, detail) — instance_path is the location INSIDE the node.
+    */
+  def violationsRaw(spark: SparkSession, schemaJson: String,
+                    metaUrl: String): DataFrame =
+    spark.createDataFrame(lintDocument(spark, schemaJson, metaUrl).map(Row.fromTuple).asJava,
+      Validator.violationsSchema(inputSchema, Seq("path")))
 
   /** Same, shaped for the standard output renderers: the node pointer and
     * the within-node suffix fused into one instance path
@@ -850,9 +853,5 @@ object SchemaLint {
   /** Lint one schema document. Empty = valid under the draft's meta. */
   def violations(spark: SparkSession, schemaJson: String,
                  metaUrl: String): Vector[LintViolation] =
-    violationsRaw(spark, schemaJson, metaUrl)
-      .collect()
-      .map(r => LintViolation(r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3)))
-      .toVector.sortBy(v => (v.path, v.keyword))
+    lintDocument(spark, schemaJson, metaUrl).toVector.sortBy(v => (v.path, v.keyword))
 }

@@ -148,4 +148,26 @@ class MetaSpecSpec extends SparkTestBase {
       """{"columns":{"v":{"items":{"minLength":-1}}}}""")
     assert(vs.exists(_.path == "#/columns/v/items"), vs.toString)
   }
+
+  test("driver path equals the catalog arm over the invalid_specs corpus") {
+    import spark.implicits._
+    val cases = mapper.readTree(
+      getClass.getResourceAsStream("/conformance/invalid_specs.json"))
+    val docs = (cases.asScala.map(_.get("spec").toString).toSeq :+
+      MetaSpec.document).zipWithIndex.map { case (d, i) => (s"c$i", d) }
+    def multiset(vs: Seq[(String, String, String, String)]) =
+      vs.groupBy(identity).map { case (k, v) => k -> v.size }
+    val catalog = MetaSpec.violationsForCatalog(docs.toDF("id", "spec_json"),
+        "id", "spec_json")
+      .collect().toSeq.groupBy(_.getString(0)).map { case (id, rs) =>
+        id -> multiset(rs.map(r =>
+          (r.getString(1), r.getString(2), r.getString(3), r.getString(4))))
+      }
+    assert(catalog.nonEmpty)
+    docs.foreach { case (id, doc) =>
+      val local = multiset(MetaSpec.violationsFrame(spark, doc).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
+      assert(local == catalog.getOrElse(id, Map.empty), doc)
+    }
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import graft.spec.{SchemaLint, SpecError}
+import graft.spec.{MetaSpec, SchemaLint, SpecError}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Flat official-metaschema linting of bare JSON Schema documents — the
   * position-walk + cut-meta architecture (see [[graft.spec.SchemaLint]]),
@@ -14,8 +17,15 @@ class SchemaLintSpec extends SparkTestBase {
   private val m7 = "http://json-schema.org/draft-07/schema#"
   private val m4 = "http://json-schema.org/draft-04/schema#"
 
-  private def lint(schema: String, meta: String = m2020) =
-    SchemaLint.violations(spark, schema, meta)
+  // every (meta, document) `lint` returned for: the driver-vs-catalog
+  // differential at the end of this suite replays them all
+  private val linted = ArrayBuffer.empty[(String, String)]
+
+  private def lint(schema: String, meta: String = m2020) = {
+    val v = SchemaLint.violations(spark, schema, meta)
+    linted += ((meta, schema))
+    v
+  }
 
   test("valid schemas lint clean under 2020-12") {
     assert(lint("""{"type": "object", "properties": {"a": {"type": "string",
@@ -192,15 +202,14 @@ class SchemaLintSpec extends SparkTestBase {
     assert(checked >= 23) // the whole corpus (custom-meta resources vacuous)
   }
 
-  test("fuzz: 200 mutated schema documents lint in one batch without crashing") {
-    import spark.implicits._
+  private lazy val fuzzMutants: IndexedSeq[(String, String)] = {
     val rnd = new scala.util.Random(20260817L)
     val seeds = Vector(
       """{"type": "object", "properties": {"a": {"type": "string"}}}""",
       """{"allOf": [{"minimum": 0}, {"maximum": 9}], "$defs": {"x": true}}""",
       """{"prefixItems": [{"enum": [1, 2]}], "contains": {"const": "k"}}""",
       """{"patternProperties": {"^a": {"pattern": "x+"}}, "required": ["a"]}""")
-    val mutants = (0 until 200).map { i =>
+    (0 until 200).map { i =>
       val s = seeds(i % seeds.length)
       val m = rnd.nextInt(6) match {
         case 0 => s.replaceFirst("\\{", s"""{"minLength": ${rnd.nextInt(9) - 4},""")
@@ -213,7 +222,11 @@ class SchemaLintSpec extends SparkTestBase {
       }
       (s"m$i", m)
     }
-    val df = mutants.toDF("id", "schema_json")
+  }
+
+  test("fuzz: 200 mutated schema documents lint in one batch without crashing") {
+    import spark.implicits._
+    val df = fuzzMutants.toDF("id", "schema_json")
     val verdicts = SchemaLint.verdictsForCatalog(df, "id", "schema_json", m2020)
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(verdicts.size == 200) // every document produced a verdict
@@ -343,5 +356,105 @@ class SchemaLintSpec extends SparkTestBase {
     assert(got == Map("official_ok" -> true, "official_bad" -> false,
       "gated_ok" -> true, "gated_bad" -> false,
       "plain_ok" -> true, "plain_bad" -> false), got.toString)
+  }
+
+  // ------------------------------------------- driver path vs catalog arm
+
+  test("single-document frames keep their column names, types and nullability") {
+    val raw = StructType(Seq(StructField("path", StringType, nullable = false),
+      StructField("keyword", StringType), StructField("instance_path", StringType),
+      StructField("detail", StringType)))
+    Seq("""{"type": 123}""", "true").foreach { doc =>
+      assert(SchemaLint.violationsRaw(spark, doc, m2020).schema == raw)
+      // the CLI renderer's frame
+      assert(SchemaLint.violationsFrame(spark, doc, m2020).schema ==
+        StructType(raw.fields.drop(1)))
+    }
+    Seq("""{"columns": {"a": {"type": 5}}}""", "{}").foreach { doc =>
+      assert(MetaSpec.violationsFrame(spark, doc).schema == raw)
+    }
+  }
+
+  test("after warm-up, one-document lints start no Spark job") {
+    val docs = Seq(("""{"properties": {"a": {"minLength": -1}}}""", m2020),
+      ("""{"minimum": 3, "exclusiveMinimum": true}""", m4), ("""{"type": """, m7))
+    val spec = """{"columns": {"a": {"type": "string", "minLength": -1}}}"""
+    def run(): Unit = {
+      docs.foreach { case (d, m) => SchemaLint.violations(spark, d, m) }
+      MetaSpec.violations(spark, spec)
+    }
+    run() // binds each meta-suite once
+    assert(jobsStarted(run()) == 0)
+    // the counter sees the distributed arm's jobs
+    import spark.implicits._
+    assert(jobsStarted(SchemaLint.violationsForCatalog(
+      Seq(("d", docs.head._1)).toDF("id", "schema_json"), "id", "schema_json",
+      m2020).collect()) > 0)
+  }
+
+  test("eight threads linting at once get the sequential results") {
+    val docs = Vector(("""{"type": 123, "properties": {"a": {"not": 3}}}""", m2020),
+      ("""{"$recursiveAnchor": true, "minLength": -2}""", m2019),
+      ("""{"if": {"pattern": "["}, "enum": 5}""", m7),
+      ("""{"properties": {"a": true}, "minimum": "x"}""", m4),
+      ("""{"$id": "not a uri", "required": "name"}""", m2020))
+    val expected = docs.map { case (d, m) => SchemaLint.violations(spark, d, m) }
+    val spec = """{"columns": {"a": {"type": 5, "minLength": -1}}}"""
+    val specExpected = MetaSpec.violations(spark, spec)
+    assert(expected.forall(_.nonEmpty) && specExpected.nonEmpty)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val results = (0 until 8).map { t =>
+        pool.submit(() => (0 until 5).flatMap { round =>
+          docs.indices.map { j =>
+            val i = (j + t + round) % docs.size
+            val (d, m) = docs(i)
+            (i, SchemaLint.violations(spark, d, m), MetaSpec.violations(spark, spec))
+          }
+        })
+      }.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(results.size == 8 * 5 * docs.size)
+      results.foreach { case (i, got, specGot) =>
+        assert(got == expected(i), s"document $i")
+        assert(specGot == specExpected)
+      }
+    } finally pool.shutdown()
+  }
+
+  test("driver path equals the catalog arm on every linted document and the fuzz corpus") {
+    import spark.implicits._
+    type Vio = (String, String, String, String)
+    def multiset(vs: Seq[Vio]) = vs.groupBy(identity).map { case (k, v) => k -> v.size }
+    val mixed = Seq(
+      s"""{"$$defs": {"old": {"id": "urn:graft:diff4",
+         |  "$$schema": "http://json-schema.org/draft-04/schema#",
+         |  "properties": {"n": {"minimum": 3, "exclusiveMinimum": "no"}}}},
+         |  "minLength": -1}""".stripMargin,
+      s"""{"$$schema": "http://json-schema.org/draft-07/schema#",
+         |  "if": {"pattern": "["}, "$$defs": {"x": {"$$id": "https://e.com/x",
+         |  "$$schema": "https://json-schema.org/draft/2020-12/schema",
+         |  "prefixItems": 1}}}""".stripMargin)
+    val corpus = (linted.toSeq ++ fuzzMutants.map(m => (m2020, m._2)) ++
+      mixed.map(m2020 -> _)).distinct
+    // the 200 mutants hold many repeats; distinct ones add to the corpus
+    assert(linted.nonEmpty && corpus.size > linted.distinct.size + 20)
+    var compared, flagged = 0
+    corpus.groupBy(_._1).foreach { case (meta, docs) =>
+      val withId = docs.map(_._2).zipWithIndex.map { case (d, i) => (s"d$i", d) }
+      val catalog = SchemaLint.violationsForCatalog(
+          withId.toDF("id", "schema_json"), "id", "schema_json", meta)
+        .collect().toSeq.groupBy(_.getString(0)).map { case (id, rs) =>
+          id -> multiset(rs.map(r =>
+            (r.getString(1), r.getString(2), r.getString(3), r.getString(4))))
+        }
+      withId.foreach { case (id, doc) =>
+        val local = multiset(SchemaLint.violationsRaw(spark, doc, meta).collect()
+          .toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
+        assert(local == catalog.getOrElse(id, Map.empty), s"$meta: $doc")
+        compared += 1
+        if (local.nonEmpty) flagged += 1
+      }
+    }
+    assert(compared == corpus.size && flagged > 20 && flagged < compared)
   }
 }
