@@ -190,7 +190,8 @@ object Queries5 {
   }
 
   /** (relative file, group index, group description, schema JSON,
-    * per-test (data JSON, expected valid)).
+    * per-test (data JSON, expected valid)), every file read by
+    * [[SuiteRunner.fileGroups]].
     */
   def suiteGroups: Seq[(String, Int, String, String, Vector[(String, Boolean)])] =
     suiteGroups(suiteRoot)
@@ -201,10 +202,8 @@ object Queries5 {
     val tests = testsDir(root)
     testFiles(root).flatMap { f =>
       val rel = tests.relativize(f).toString
-      mapper.readTree(f.toFile).asScala.zipWithIndex.map { case (g, gi) =>
-        (rel, gi, g.get("description").asText(), g.get("schema").toString,
-          g.get("tests").asScala.toVector.map(t =>
-            (t.get("data").toString, t.get("valid").asBoolean())))
+      SuiteRunner.fileGroups(f).map { case (gi, desc, schema, cases) =>
+        (rel, gi, desc, schema, cases)
       }
     }
   }

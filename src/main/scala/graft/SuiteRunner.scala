@@ -28,9 +28,6 @@ import scala.jdk.CollectionConverters._
   */
 object SuiteRunner {
 
-  // schemas inside suite files must keep their digits (loader.go:255-266)
-  private val mapper = graft.spec.Spec.jsonMapper
-
   /** The reference's skip list, by file name (suite_test.go:16-20). */
   val skips: Set[String] = Set("ecmascript-regex.json",
     "zeroTerminatedFloats.json", "idn-email.json", "idn-hostname.json")
@@ -42,6 +39,22 @@ object SuiteRunner {
     "draft7" -> "http://json-schema.org/draft-07/schema#",
     "draft2019-09" -> "https://json-schema.org/draft/2019-09/schema",
     "draft2020-12" -> "https://json-schema.org/draft/2020-12/schema")
+
+  /** The test groups of one suite file: (group index, description, schema
+    * JSON, per-test (data JSON, expected valid)). Read through the
+    * digit-preserving schema reader, so a schema constant beyond double
+    * precision keeps its digits (reference loader.go:255-266).
+    */
+  private[graft] def fileGroups(f: Path)
+      : Seq[(Int, String, String, Vector[(String, Boolean)])] =
+    graft.spec.Spec.readJsonDocFile(f.toString).asScala.toSeq.zipWithIndex.map {
+      case (g, gi) =>
+        val desc = Option(g.get("description")).map(_.asText()).getOrElse("")
+        val cases = Option(g.get("tests")).map(_.asScala.toVector)
+          .getOrElse(Vector.empty)
+          .map(t => (t.get("data").toString, t.get("valid").asBoolean()))
+        (gi, desc, g.get("schema").toString, cases)
+    }
 
   /** One test group: (relative file, group index, description, schema
     * JSON, optional-dir?, default draft URL, per-test (data, expected)).
@@ -65,13 +78,7 @@ object SuiteRunner {
         files.flatMap { f: Path =>
           val rel = tests.relativize(f).toString
           val optional = rel.contains("optional/") || rel.contains("optional\\")
-          graft.spec.Spec.readJsonDocFile(f.toString)
-            .asScala.zipWithIndex.map { case (g, gi) =>
-            val desc = Option(g.get("description")).map(_.asText()).getOrElse("")
-            val schema = g.get("schema").toString
-            val cases = Option(g.get("tests")).map(_.asScala.toVector)
-              .getOrElse(Vector.empty)
-              .map(t => (t.get("data").toString, t.get("valid").asBoolean()))
+          fileGroups(f).map { case (gi, desc, schema, cases) =>
             (rel, gi, desc, schema, optional, draftUrl, cases)
           }
         }

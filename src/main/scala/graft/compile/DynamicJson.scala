@@ -1,12 +1,13 @@
 package graft.compile
 
-import graft.functions.{ExactRatPredExpr, Formats}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.functions.ExactRatPredExpr
 import graft.spec.{SchemaNode, Spec, SpecError}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-import KeywordWalker.{nameCovered, vac}
+import KeywordWalker.vac
 
 /** DYNAMIC JSON validation over Spark 4 VariantType — the faithful mapping
   * of the reference's dynamically-typed instance model
@@ -33,20 +34,16 @@ import KeywordWalker.{nameCovered, vac}
   * dynamic semantics. content* keywords apply to any runtime-string
   * instance via the same pluggable registries as the static compiler
   * (decode → mediaType → contentSchema over the decoded value,
-  * reference validator.go:468-510). Refs, composition,
-  * dependentSchemas and unevaluated* are [[KeywordWalker]]'s, shared with
-  * the typed compiler; this object supplies the variant view.
+  * reference validator.go:468-510). Every keyword that does not depend on
+  * the representation is [[KeywordWalker]]'s, shared with the typed
+  * compiler; this object supplies the variant view.
   * Unsupported here (out-of-scope territory): nested `json`.
   */
 object DynamicJson {
 
-  /** Runtime JSON type name of a variant value:
-    * missing | null | object | array | string | boolean | number.
-    */
-  def jsonTypeOf(v: Column): Column =
-    jsonTypeFrom(v, graft.functions.VariantTopKindExpr(v))
-
-  /** Same, over a pre-computed (ideally bound) storage-kind column
+  /** Runtime JSON type name of a variant value — missing | null | object |
+    * array | string | boolean | number — over its pre-computed (ideally
+    * bound) storage-kind column `sch`
     * ([[graft.functions.VariantTopKindExpr]] — O(1) header read; the
     * former `schema_of_variant` source walked the whole subtree at EVERY
     * nesting level, O(depth²) per row on recursive documents). The CASE
@@ -73,9 +70,6 @@ object DynamicJson {
   private def asArr(v: Column): Column = try_variant_get(v, "$", "array<variant>")
   private def asBool(v: Column): Column = try_variant_get(v, "$", "boolean")
 
-  /** Deep-equality key: canonical JSON text (sorted object keys). */
-  private def canon(v: Column): Column = to_json(v)
-
   /** Canonical NUMBER text of a variant value, exact-rational-faithful:
     * variant-decimal numbers keep their digit-exact `to_json` text, but a
     * variant that stores the number as DOUBLE (negative-scale scientific
@@ -100,11 +94,6 @@ object DynamicJson {
         graft.functions.ShortestFloatReprExpr.col(
           try_variant_get(v, "$", "float")))
       .otherwise(to_json(v))
-
-  def predicate(spec: Spec, node: SchemaNode, v: Column,
-                stack: List[(String, Int)] = Nil, depth: Int = 0): Column =
-    compile(spec, node, v, "", stack, None, depth)
-      .map(_.pred).reduceOption(_ && _).getOrElse(lit(true))
 
   /** The variant view: runtime type dispatch per row. Every keyword of a
     * node re-reads the runtime type and the typed extractions, so they are
@@ -155,51 +144,34 @@ object DynamicJson {
     def gate(jsonType: String, core: Column): Column =
       vac(v, (t =!= jsonType) || coalesce(core, lit(false)))
     def items: Column = arr
+    // canonical-JSON dedup = deep equality incl. sorted object keys;
+    // NUMBERS canonicalize through the exact-rational rendering so 2 and
+    // 2.0 are the same element (the reference's numeric equality,
+    // Extra-Test-Suite uniqueItems.json "zero fraction") while
+    // digit-distinct numbers at ANY scale stay distinct — no Decimal or
+    // double rounding at any magnitude (util.go:322-325 semantics).
+    // EVERY element takes the storage-faithful deep canonicalizer
+    // (VariantCanonExpr: one variant-binary walk per element — numbers
+    // normalized at ANY nesting level by their actual storage class,
+    // decimal → digit-exact / double → shortest repr, keys sorted,
+    // strings re-escaped through one writer: {"a":1.0} duplicates
+    // {"a":1}, 2.0 duplicates 2, "2" stays distinct from 2). No
+    // schema_of_variant dispatch, no to_json + Jackson reparse — and
+    // nested variant-DOUBLE numbers group by the same shortest-repr
+    // rule the scalar path applies (deep = shallow at every level).
+    def uniqueKey: Column = transform(arr, e => graft.functions.VariantCanonExpr.col(e))
     def entries: Column = asMap
+    // the member's checks as one predicate, compiled here rather than
+    // through a helper: one frame less on every descent (see KeywordWalker)
     def memberPredicate(spec: Spec, node: SchemaNode, x: Column,
         stack: List[(String, Int)], depth: Int): Column =
-      predicate(spec, node, x, stack, depth)
+      DynamicJson.compile(spec, node, x, "", stack, None, depth)
+        .map(_.pred).reduceOption(_ && _).getOrElse(lit(true))
     def keyPresent(k: String): Column = (t === "object") && propGet(k).isNotNull
-    def oneOfDetail: String = " matched, want exactly 1"
-    // the if-predicate feeds EVERY then/else check — without binding, the
-    // whole if-subschema tree re-evaluates once per emitted check
-    def bindsIf: Boolean = true
-  }
-
-  def compile(spec: Spec, node: SchemaNode, v: Column,
-              instPath: String, stack: List[(String, Int)] = Nil,
-              binder: Option[Binder] = None, depth: Int = 0): Seq[Check] = {
-    val x = new VariantView(v, binder)
-    val w = new KeywordWalker(spec, node, x, instPath, stack, binder, depth)
-    import w.{add, kw, out}
-    import x.{arr, asMap, b, propGet, t, vCanon, vNum, vStr}
-    if (!w.enter()) return w.result
-
-    // type — runtime dispatch; integer = number with zero fraction
-    node.types.foreach { ts =>
-      val base = ts.map(name => t === lit(name))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val intOk =
-        if (ts.contains("integer") && !ts.contains("number"))
-          // exact zero-fraction rule: multipleOf-1 over the canonical
-          // number text (util.go:272-275 / big.Rat IsInt). NOT pmod-1 on
-          // the double extract, whose decimal→double cast rounds
-          // >16-fractional-digit texts (1.00000000000000001) onto an
-          // integer the reference rejects; 1e30-class values stay integral
-          // (their shortest repr has no fraction)
-          (t === "number") && coalesce(
-            ExactRatPredExpr.pred(vCanon, ExactRatPredExpr.MultipleOf,
-              java.math.BigDecimal.ONE),
-            lit(false))
-        else lit(false)
-      add(kw("type"), vac(v, base || intOk),
-        concat(lit("type: got "), t, lit(s", want ${ts.mkString("|")}")),
-        ErrorKind.TypeMismatch(ts))
-    }
 
     // const / enum — deep equality over canonical JSON with numeric
     // cross-type handling (2 == 2.0 compares as decimal)
-    def constEqDyn(jn: com.fasterxml.jackson.databind.JsonNode): Column =
+    def constEq(jn: JsonNode): Column =
       if (jn.isNumber)
         // exact rational equality over the canonical number text
         // (compareTo, so 2 == 2.0 across renderings) — no Decimal(38,12)
@@ -228,135 +200,70 @@ object DynamicJson {
         ).toString
         graft.functions.VariantCanonExpr.col(v) === lit(constCanon)
       }
+    // canonical JSON text (sorted object keys)
+    def rendered: Column = to_json(v)
+    // number keywords: exact rational compare over the canonical number
+    // text — digit-exact for variant-decimal numbers, shortest-repr for
+    // variant-double ones, the reference's json.Number / float64 decode
+    // modes respectively (validator.go:519 feeds fmt.Sprint to big.Rat);
+    // a Decimal(38,12) extract would ROUND >12-dp values before comparing
+    def numberCore(op: Int, bd: BigDecimal): Column =
+      ExactRatPredExpr.pred(vCanon, op, bd.bigDecimal)
+    def numberText: Column = vNum.cast(StringType)
+    def str: Column = vStr
+    def oneOfDetail: String = " matched, want exactly 1"
+    def countsItemFailures: Boolean = false
+    def containsDetail(minC: Int, maxC: Option[Int]): String = s" matching, want >= $minC"
+    // the if-predicate feeds EVERY then/else check — without binding, the
+    // whole if-subschema tree re-evaluates once per emitted check
+    def bindsIf: Boolean = true
+  }
 
-    node.const.foreach { c =>
-      add(kw("const"), vac(v, constEqDyn(c)),
-        concat(lit("const: got "), canon(v), lit(s", want $c")),
-        ErrorKind.ConstK(c.toString))
-    }
-    node.enumVals.foreach { vals =>
-      // an empty enum matches nothing (legal under 2020-12)
-      add(kw("enum"), vac(v,
-          vals.map(constEqDyn).reduceOption(_ || _).getOrElse(lit(false))),
-        concat(lit("enum: got "), canon(v), lit(s", want one of ${vals.mkString(", ")}")),
-        ErrorKind.EnumK(vals.map(_.toString)))
+  def compile(spec: Spec, node: SchemaNode, v: Column,
+              instPath: String, stack: List[(String, Int)] = Nil,
+              binder: Option[Binder] = None, depth: Int = 0): Seq[Check] = {
+    val x = new VariantView(v, binder)
+    val w = new KeywordWalker(spec, node, x, instPath, stack, binder, depth)
+    import w.{add, kw, out}
+    import x.{b, propGet, t, vCanon, vStr}
+    if (!w.enter()) return w.result
+
+    // type — runtime dispatch; integer = number with zero fraction
+    node.types.foreach { ts =>
+      val base = ts.map(name => t === lit(name))
+        .reduceOption(_ || _).getOrElse(lit(false))
+      val intOk =
+        if (ts.contains("integer") && !ts.contains("number"))
+          // exact zero-fraction rule: multipleOf-1 over the canonical
+          // number text (util.go:272-275 / big.Rat IsInt). NOT pmod-1 on
+          // the double extract, whose decimal→double cast rounds
+          // >16-fractional-digit texts (1.00000000000000001) onto an
+          // integer the reference rejects; 1e30-class values stay integral
+          // (their shortest repr has no fraction)
+          (t === "number") && coalesce(
+            ExactRatPredExpr.pred(vCanon, ExactRatPredExpr.MultipleOf,
+              java.math.BigDecimal.ONE),
+            lit(false))
+        else lit(false)
+      add(kw("type"), vac(v, base || intOk),
+        concat(lit("type: got "), t, lit(s", want ${ts.mkString("|")}")),
+        ErrorKind.TypeMismatch(ts))
     }
 
-    // number keywords — gated on runtime number type (vacuous otherwise).
-    // Exact rational compare over the canonical number text: digit-exact
-    // for variant-decimal numbers, shortest-repr for variant-double ones —
-    // the reference's json.Number / float64 decode modes respectively
-    // (validator.go:519 feeds fmt.Sprint to big.Rat). Replaces the former
-    // Decimal(38,12) extract whose cast ROUNDED >12-dp values before
-    // comparing. canon(v) is already on this row path (messages, const).
-    def boundCheck(name: String, bd: BigDecimal, opCode: Int, want: String,
-                   kind: ErrorKind): Unit = {
-      val core = ExactRatPredExpr.pred(vCanon, opCode, bd.bigDecimal)
-      add(kw(name), vac(v, (t =!= "number") || coalesce(core, lit(false))),
-        concat(lit(s"$name: got "), vNum.cast(StringType), lit(s", want $want")),
+    w.constEnum()
+    w.numbers()
+
+    // string lengths — gated on runtime string type
+    def lengthCheck(name: String, core: Column, msg: String, kind: ErrorKind): Unit =
+      add(kw(name), x.gate("string", core), concat(lit(s"$name: "), x.rendered, lit(s" $msg")),
         kind)
-    }
-    node.minimum.foreach(bd =>
-      boundCheck("minimum", bd, ExactRatPredExpr.Ge, s">= $bd", ErrorKind.Minimum(bd)))
-    node.maximum.foreach(bd =>
-      boundCheck("maximum", bd, ExactRatPredExpr.Le, s"<= $bd", ErrorKind.Maximum(bd)))
-    node.exclusiveMinimum.foreach(bd =>
-      boundCheck("exclusiveMinimum", bd, ExactRatPredExpr.Gt, s"> $bd",
-        ErrorKind.ExclusiveMinimum(bd)))
-    node.exclusiveMaximum.foreach(bd =>
-      boundCheck("exclusiveMaximum", bd, ExactRatPredExpr.Lt, s"< $bd",
-        ErrorKind.ExclusiveMaximum(bd)))
-    node.multipleOf.foreach { m =>
-      val core = coalesce(
-        ExactRatPredExpr.pred(vCanon, ExactRatPredExpr.MultipleOf,
-          m.bigDecimal),
-        lit(false))
-      add(kw("multipleOf"), vac(v, (t =!= "number") || core),
-        concat(lit("multipleOf: got "), canon(v), lit(s", want multiple of $m")),
-        ErrorKind.MultipleOf(m))
-    }
-
-    // string keywords — gated on runtime string type
-    def strCheck(name: String, core: Column => Column, msg: String,
-                 kind: ErrorKind): Unit =
-      add(kw(name), vac(v, (t =!= "string") || coalesce(core(vStr), lit(false))),
-        concat(lit(s"$name: "), canon(v), lit(s" $msg")),
-        kind)
-    node.minLength.foreach(n => strCheck("minLength", length(_) >= n,
+    node.minLength.foreach(n => lengthCheck("minLength", length(vStr) >= n,
       s"shorter than $n chars", ErrorKind.MinLength(n)))
-    node.maxLength.foreach(n => strCheck("maxLength", length(_) <= n,
+    node.maxLength.foreach(n => lengthCheck("maxLength", length(vStr) <= n,
       s"longer than $n chars", ErrorKind.MaxLength(n)))
-    node.pattern.foreach(p => strCheck("pattern", Formats.patternMatch(_, p),
-      s"does not match '$p'", ErrorKind.PatternK(p)))
-    node.format.foreach { f =>
-      Formats.get(f) match {
-        case Some(fn) =>
-          strCheck("format", fn, s"is not a valid $f", ErrorKind.FormatK(f))
-        case None if node.formatLenient => // compat: unregistered format is
-        // an ignored annotation (the reference's nil-Format skip)
-        case None =>
-          throw SpecError(kw("format"), s"unknown format '$f'")
-      }
-    }
-
-    // array keywords over array<variant>
-    def arrCheck(name: String, core: Column, detail: Column,
-                 kind: ErrorKind): Unit =
-      add(kw(name), x.gate("array", core), detail, kind)
-    node.minItems.foreach(n => arrCheck("minItems", size(arr) >= n,
-      concat(lit("minItems: got "), size(arr).cast(StringType), lit(s", want >= $n")),
-      ErrorKind.MinItems(n)))
-    node.maxItems.foreach(n => arrCheck("maxItems", size(arr) <= n,
-      concat(lit("maxItems: got "), size(arr).cast(StringType), lit(s", want <= $n")),
-      ErrorKind.MaxItems(n)))
-    if (node.uniqueItems) {
-      // canonical-JSON dedup = deep equality incl. sorted object keys;
-      // NUMBERS canonicalize through the exact-rational rendering so 2 and
-      // 2.0 are the same element (the reference's numeric equality,
-      // Extra-Test-Suite uniqueItems.json "zero fraction") while
-      // digit-distinct numbers at ANY scale stay distinct — no Decimal or
-      // double rounding at any magnitude (util.go:322-325 semantics).
-      // EVERY element takes the storage-faithful deep canonicalizer
-      // (VariantCanonExpr: one variant-binary walk per element — numbers
-      // normalized at ANY nesting level by their actual storage class,
-      // decimal → digit-exact / double → shortest repr, keys sorted,
-      // strings re-escaped through one writer: {"a":1.0} duplicates
-      // {"a":1}, 2.0 duplicates 2, "2" stays distinct from 2). No
-      // schema_of_variant dispatch, no to_json + Jackson reparse — and
-      // nested variant-DOUBLE numbers group by the same shortest-repr
-      // rule the scalar path applies (deep = shallow at every level).
-      val canonArr = transform(arr,
-        e => graft.functions.VariantCanonExpr.col(e))
-      arrCheck("uniqueItems", size(array_distinct(canonArr)) === size(arr),
-        lit("uniqueItems: duplicate items found"),
-        ErrorKind.UniqueItemsK)
-    }
-    node.prefixItems.zipWithIndex.foreach { case (ps, i) =>
-      val p = predicate(spec, ps, element_at(arr, i + 1), stack, depth + 1)
-      arrCheck(s"prefixItems/$i", size(arr) <= i || coalesce(p, lit(false)),
-        lit(s"prefixItems/$i: element does not match"),
-        ErrorKind.PrefixItemsK(i))
-    }
-    val prefixN = node.prefixItems.size
-    node.items.foreach { is =>
-      // 2020-12: items applies AFTER the prefix
-      val rest = if (prefixN == 0) arr
-        else slice(arr, lit(prefixN + 1), greatest(size(arr) - prefixN, lit(0)))
-      val p = forall(rest, e => coalesce(predicate(spec, is, e, stack, depth + 1), lit(false)))
-      arrCheck("items", p, lit("items: element(s) do not match"),
-        ErrorKind.ItemsK)
-    }
-    node.contains.foreach { cs =>
-      val cnt = size(filter(arr, e => coalesce(predicate(spec, cs, e, stack, depth + 1), lit(false))))
-      val minC = node.minContains.getOrElse(1)
-      val core = node.maxContains match {
-        case Some(mx) => cnt >= minC && cnt <= mx
-        case None     => cnt >= minC
-      }
-      arrCheck("contains", core,
-        concat(lit("contains: "), cnt.cast(StringType), lit(s" matching, want >= $minC")),
-        ErrorKind.ContainsK(minC, node.maxContains))
-    }
+    w.pattern()
+    w.format()
+    w.arrays()
 
     node.requiredProps.foreach { k =>
       add(kw("required"),
@@ -383,54 +290,10 @@ object DynamicJson {
     }
 
     // key-enumerating object keywords over the bound map view
-    def objCheck(name: String, core: Column, detail: Column,
-                 kind: ErrorKind): Unit =
-      add(kw(name), x.gate("object", core), detail, kind)
-    node.minProperties.foreach(n =>
-      objCheck("minProperties", size(map_keys(asMap)) >= n,
-        concat(lit("minProperties: got "), size(map_keys(asMap)).cast(StringType),
-          lit(s", want >= $n")),
-        ErrorKind.MinProperties(n)))
-    node.maxProperties.foreach(n =>
-      objCheck("maxProperties", size(map_keys(asMap)) <= n,
-        concat(lit("maxProperties: got "), size(map_keys(asMap)).cast(StringType),
-          lit(s", want <= $n")),
-        ErrorKind.MaxProperties(n)))
-    node.propertyNames.foreach { ps =>
-      // key names are strings — the STATIC string compiler applies
-      val p = forall(map_keys(asMap),
-        k => coalesce(RowCompiler.predicate(spec, ps, k,
-          org.apache.spark.sql.types.StringType, stack, depth + 1), lit(false)))
-      objCheck("propertyNames", p, lit("propertyNames: key does not match"),
-        ErrorKind.PropertyNamesK("*"))
-    }
-    node.patternProperties.foreach { case (re, ps) =>
-      val sub = map_filter(asMap, (k, _) => Formats.patternMatch(k, re))
-      val p = forall(map_values(sub),
-        x => coalesce(predicate(spec, ps, x, stack, depth + 1), lit(false)))
-      add(kw("patternProperties", re),
-        vac(v, (t =!= "object") || coalesce(p, lit(false))),
-        lit(s"patternProperties: value(s) for keys matching '$re' do not match"),
-        ErrorKind.PatternPropertiesK(re))
-    }
-    node.additionalProperties.foreach { ap =>
-      def isKnown(k: Column): Column = nameCovered(k,
-        node.properties.map(_._1), node.patternProperties.map(_._1))
-      ap match {
-        case Left(true) =>
-        case Left(false) =>
-          objCheck("additionalProperties", forall(map_keys(asMap), isKnown),
-            lit("additionalProperties: unexpected key(s)"),
-            ErrorKind.AdditionalPropertiesK)
-        case Right(as) =>
-          val rem = map_filter(asMap, (k, _) => !isKnown(k))
-          val p = forall(map_values(rem),
-            x => coalesce(predicate(spec, as, x, stack, depth + 1), lit(false)))
-          objCheck("additionalProperties", p,
-            lit("additionalProperties: value(s) do not match"),
-            ErrorKind.AdditionalPropertiesK)
-      }
-    }
+    w.propertyCounts()
+    w.propertyNames()
+    w.patternProperties()
+    w.additionalProperties()
     // content* keywords over runtime strings (/root/reference/
     // validator.go:468-510): wherever a string instance appears in the
     // dynamic tree, decode via the pluggable registry, then media-type and
@@ -438,14 +301,7 @@ object DynamicJson {
     // vacuous (the reference only applies content* to strings).
     if (node.contentEncoding.nonEmpty || node.contentMediaType.nonEmpty ||
         node.contentSchema.nonEmpty) {
-      val contentValue = b(node.contentEncoding match {
-        case Some(enc) =>
-          val decode = graft.functions.Content.encoding(enc).getOrElse(
-            throw SpecError(kw("contentEncoding"),
-              s"unknown encoding '$enc' (registered: ${graft.functions.Content.knownEncodings.mkString(", ")})"))
-          decode(vStr)
-        case None => vStr
-      })
+      val contentValue = b(node.contentEncoding.fold(vStr)(w.decoder(_)(vStr)))
       node.contentEncoding.foreach { enc =>
         add(kw("contentEncoding"),
           vac(v, (t =!= "string") || contentValue.isNotNull),
@@ -456,13 +312,8 @@ object DynamicJson {
       // checks are vacuous on the null decoded value, like the static arm.
       // mediaOk is shared between the contentMediaType check and the
       // contentSchema !parse gate — ONE bound evaluation per row
-      lazy val mediaOk: Column = {
-        val mt = node.contentMediaType.get
-        val parseOk = graft.functions.Content.mediaType(mt).getOrElse(
-          throw SpecError(kw("contentMediaType"),
-            s"unknown media type '$mt' (registered: ${graft.functions.Content.knownMediaTypes.mkString(", ")})"))
-        b(coalesce(parseOk(contentValue), lit(false)))
-      }
+      lazy val mediaOk: Column =
+        b(coalesce(w.mediaType(node.contentMediaType.get)(contentValue), lit(false)))
       node.contentMediaType.foreach { mt =>
         add(kw("contentMediaType"),
           vac(v, (t =!= "string") ||

@@ -1,6 +1,7 @@
 package graft.compile
 
-import graft.functions.Formats
+import com.fasterxml.jackson.databind.JsonNode
+import graft.functions.{Content, ExactRatPredExpr, Formats}
 import graft.spec.{SchemaNode, Spec, SpecError}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -25,13 +26,18 @@ private[compile] trait ValueView {
       stack: List[(String, Int)], binder: Option[Binder], depth: Int): Seq[Check]
 
   /** Type gate: a keyword's `core` predicate for values of `jsonType`
-    * ("array" | "object"), vacuous on absent values and, when the type is
-    * only known at runtime, on values of another type.
+    * ("array" | "object" | "number" | "string"), vacuous on absent values
+    * and, when the type is only known at runtime, on values of another type.
     */
   def gate(jsonType: String, core: Column): Column
 
   /** Array-like access: the value as an array. */
   def items: Column
+
+  /** The `uniqueItems` dedup key: the array with each element in the form
+    * whose equality is JSON equality.
+    */
+  def uniqueKey: Column
 
   /** Map-like access: the value as a map from key to member. */
   def entries: Column
@@ -49,8 +55,31 @@ private[compile] trait ValueView {
   def dependentGate(k: String): Option[Column] =
     Some(!coalesce(keyPresent(k), lit(false)))
 
+  /** Whether the value equals the JSON constant `c` (const, enum). */
+  def constEq(c: JsonNode): Column
+
+  /** The value as rendered in const, enum, multipleOf and string details. */
+  def rendered: Column
+
+  /** Core of a number keyword: the value against `bd` under `op`, an
+    * [[ExactRatPredExpr]] op code (Ge, Le, Gt, Lt, MultipleOf).
+    */
+  def numberCore(op: Int, bd: BigDecimal): Column
+
+  /** The value as rendered in the bound keywords' details. */
+  def numberText: Column
+
+  /** The value as a string (pattern, format, content*). */
+  def str: Column
+
   /** Tail of the `oneOf` violation detail, after the match count. */
   def oneOfDetail: String
+
+  /** Whether the `items` detail counts the elements that fail. */
+  def countsItemFailures: Boolean
+
+  /** Tail of the `contains` violation detail, after the match count. */
+  def containsDetail(minC: Int, maxC: Option[Int]): String
 
   /** Whether the `if` predicate is bound once per row before it gates the
     * then/else checks.
@@ -58,18 +87,22 @@ private[compile] trait ValueView {
   def bindsIf: Boolean
 }
 
-/** One compile call of one schema node: the type-independent half of the
-  * reference's keyword walk (reference validator.go:70-196) —
-  * keyword paths and [[Check]] bookkeeping, boolean schemas, `$ref` /
-  * `$dynamicRef` inlining, composition, `dependentSchemas` gating and the
-  * `unevaluated*` lowerings. A compiler runs [[enter]], then its own
-  * type-dependent keywords (calling [[dependentSchemas]],
-  * [[unevaluatedItems]], [[unevaluatedProperties]] or [[evaluatedProps]]
-  * where its keyword order puts them), then [[composition]], and returns
-  * [[result]]. The steps are called from the compiler's own `compile`, not
-  * through a callback: Spark records a stack trace in every `Column` it
-  * builds, so each frame a recursion level adds is paid on every column
-  * below it (30 extra frames cost about half again the compile time).
+/** One compile call of one schema node: the reference's keyword walk
+  * (reference validator.go:70-196) over a [[ValueView]] — keyword paths and
+  * [[Check]] bookkeeping, boolean schemas, `$ref` / `$dynamicRef` inlining,
+  * const/enum, the number, pattern/format, array and map-shaped object
+  * keywords, the content* registry lookups, composition, `dependentSchemas`
+  * gating and the `unevaluated*` lowerings. A compiler runs [[enter]], then
+  * its keywords in its own order — the ones that depend on its
+  * representation (`type`, `required`, `properties`, `dependentRequired`,
+  * string lengths, struct-shaped objects, content checks) written out, the
+  * others as the walker's steps, called only where its type can hold the
+  * keyword — then [[composition]], and returns [[result]]. The steps are
+  * called from the compiler's own `compile`, not through a callback: Spark
+  * records a stack trace in every `Column` it builds, so each frame a
+  * recursion level adds is paid on every column below it (30 extra frames
+  * cost about half again the compile time). For the same reason member
+  * descent goes straight from a lambda to [[ValueView.memberPredicate]].
   */
 private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
     view: ValueView, val instPath: String, val stack: List[(String, Int)],
@@ -91,8 +124,9 @@ private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
   private def probe(n: SchemaNode): Column =
     view.compile(spec, n, "", stack, None, depth)
       .map(_.pred).reduceOption(_ && _).getOrElse(lit(true))
-  private def member(n: SchemaNode, x: Column): Column =
-    coalesce(view.memberPredicate(spec, n, x, stack, depth + 1), lit(false))
+  /** The predicate of `n` over one member, NULL read as failure. */
+  private def member(n: SchemaNode): Column => Column =
+    x => coalesce(view.memberPredicate(spec, n, x, stack, depth + 1), lit(false))
 
   def result: Seq[Check] = out.result()
 
@@ -184,6 +218,186 @@ private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
     }
   }
 
+  /** const and enum (reference validator.go:106-113): deep equality with
+    * numeric cross-type fidelity, as the view defines it. An empty enum
+    * matches nothing (legal under 2020-12).
+    */
+  def constEnum(): Unit = {
+    node.const.foreach { c =>
+      add(kw("const"), vac(v, view.constEq(c)),
+        concat(lit("const: got "), view.rendered, lit(s", want $c")),
+        ErrorKind.ConstK(c.toString))
+    }
+    node.enumVals.foreach { vals =>
+      add(kw("enum"), vac(v, vals.map(view.constEq).reduceOption(_ || _).getOrElse(lit(false))),
+        concat(lit("enum: got "), view.rendered, lit(s", want one of ${vals.mkString(", ")}")),
+        ErrorKind.EnumK(vals.map(_.toString)))
+    }
+  }
+
+  /** Number keywords (reference validator.go:513-550) over the view's
+    * number core: big.Rat-exact comparison and divisibility.
+    */
+  def numbers(): Unit = {
+    // `text` by name: built after the core, so a view that binds both
+    // binds them in that order
+    def check(name: String, op: Int, bd: BigDecimal, want: String, text: => Column,
+        kind: ErrorKind): Unit =
+      add(kw(name), view.gate("number", view.numberCore(op, bd)),
+        concat(lit(s"$name: got "), text, lit(s", want $want")), kind)
+    import ExactRatPredExpr.{Ge, Gt, Le, Lt, MultipleOf}
+    node.minimum.foreach(b =>
+      check("minimum", Ge, b, s">= $b", view.numberText, ErrorKind.Minimum(b)))
+    node.maximum.foreach(b =>
+      check("maximum", Le, b, s"<= $b", view.numberText, ErrorKind.Maximum(b)))
+    node.exclusiveMinimum.foreach(b =>
+      check("exclusiveMinimum", Gt, b, s"> $b", view.numberText, ErrorKind.ExclusiveMinimum(b)))
+    node.exclusiveMaximum.foreach(b =>
+      check("exclusiveMaximum", Lt, b, s"< $b", view.numberText, ErrorKind.ExclusiveMaximum(b)))
+    node.multipleOf.foreach(m =>
+      check("multipleOf", MultipleOf, m, s"multiple of $m", view.rendered, ErrorKind.MultipleOf(m)))
+  }
+
+  /** pattern: regex *search* through the pluggable engine (reference
+    * validator.go:455-459 and its UseRegexpEngine hook).
+    */
+  def pattern(): Unit = node.pattern.foreach { p =>
+    add(kw("pattern"), view.gate("string", Formats.patternMatch(view.str, p)),
+      concat(lit("pattern: "), view.rendered, lit(s" does not match '$p'")),
+      ErrorKind.PatternK(p))
+  }
+
+  /** format (reference validator.go:136-146) through the format registry.
+    * An unregistered format is a spec error, or an ignored annotation under
+    * the compat dialects (the reference's nil-Format skip).
+    */
+  def format(): Unit = node.format.foreach { f =>
+    Formats.get(f) match {
+      case Some(fn) =>
+        add(kw("format"), view.gate("string", fn(view.str)),
+          concat(lit("format: "), view.rendered, lit(s" is not a valid $f")),
+          ErrorKind.FormatK(f))
+      case None if node.formatLenient =>
+      case None => throw SpecError(kw("format"), s"unknown format '$f'")
+    }
+  }
+
+  /** The contentEncoding decoder from the pluggable registry (reference
+    * content.go:17-24, RegisterContentEncoding compiler.go:85-90).
+    */
+  def decoder(enc: String): Column => Column = Content.encoding(enc).getOrElse(
+    throw SpecError(kw("contentEncoding"),
+      s"unknown encoding '$enc' (registered: ${Content.knownEncodings.mkString(", ")})"))
+
+  /** The contentMediaType parse check from the pluggable registry
+    * (RegisterContentMediaType, reference compiler.go:91-95).
+    */
+  def mediaType(mt: String): Column => Column = Content.mediaType(mt).getOrElse(
+    throw SpecError(kw("contentMediaType"),
+      s"unknown media type '$mt' (registered: ${Content.knownMediaTypes.mkString(", ")})"))
+
+  /** Array keywords (reference validator.go:324-430) over the view's array.
+    * `items` applies after the `prefixItems` prefix (2020-12).
+    */
+  def arrays(): Unit = {
+    def arr = view.items
+    def check(name: String, core: Column, detail: Column, kind: ErrorKind): Unit =
+      add(kw(name), view.gate("array", core), detail, kind)
+    node.minItems.foreach(n => check("minItems", size(arr) >= n,
+      concat(lit("minItems: got "), size(arr).cast(StringType), lit(s", want >= $n")),
+      ErrorKind.MinItems(n)))
+    node.maxItems.foreach(n => check("maxItems", size(arr) <= n,
+      concat(lit("maxItems: got "), size(arr).cast(StringType), lit(s", want <= $n")),
+      ErrorKind.MaxItems(n)))
+    // hash-based dedup — the scalable arm of reference util.go:331-361
+    if (node.uniqueItems)
+      check("uniqueItems", size(array_distinct(view.uniqueKey)) === size(arr),
+        lit("uniqueItems: duplicate items found"), ErrorKind.UniqueItemsK)
+    node.prefixItems.zipWithIndex.foreach { case (ps, i) =>
+      val p = view.memberPredicate(spec, ps, element_at(arr, i + 1), stack, depth + 1)
+      check(s"prefixItems/$i", size(arr) <= i || coalesce(p, lit(false)),
+        lit(s"prefixItems/$i: element does not match"), ErrorKind.PrefixItemsK(i))
+    }
+    val prefixN = node.prefixItems.size
+    node.items.foreach { is =>
+      val rest = if (prefixN == 0) arr
+        else slice(arr, lit(prefixN + 1), greatest(size(arr) - prefixN, lit(0)))
+      val p = forall(rest, member(is))
+      val detail = if (!view.countsItemFailures) lit("items: element(s) do not match")
+        else concat(lit("items: "), size(filter(rest, x =>
+            !coalesce(view.memberPredicate(spec, is, x, stack, depth + 1), lit(false))))
+          .cast(StringType), lit(" element(s) do not match"))
+      check("items", p, detail, ErrorKind.ItemsK)
+    }
+    node.contains.foreach { cs =>
+      val cnt = size(filter(arr, member(cs)))
+      val minC = node.minContains.getOrElse(1)
+      val core = node.maxContains match {
+        case Some(mx) => cnt >= minC && cnt <= mx
+        case None     => cnt >= minC
+      }
+      check("contains", core, concat(lit("contains: "), cnt.cast(StringType),
+          lit(view.containsDetail(minC, node.maxContains))),
+        ErrorKind.ContainsK(minC, node.maxContains))
+    }
+  }
+
+  /** propertyNames over the view's map keys (reference
+    * validator.go:286-301): key names are strings, so the typed string
+    * compiler applies.
+    */
+  def propertyNames(): Unit = node.propertyNames.foreach { ps =>
+    val p = forall(map_keys(view.entries), k =>
+      coalesce(RowCompiler.predicate(spec, ps, k, StringType, stack, depth + 1), lit(false)))
+    add(kw("propertyNames"), view.gate("object", p), lit("propertyNames: key does not match"),
+      ErrorKind.PropertyNamesK("*"))
+  }
+
+  /** patternProperties over the view's map. Key matching goes through the
+    * pluggable regex engine, like `pattern` (the reference's
+    * UseRegexpEngine governs both, reference compiler.go:141-151).
+    */
+  def patternProperties(): Unit = node.patternProperties.foreach { case (re, ps) =>
+    val sub = map_filter(view.entries, (k, _) => Formats.patternMatch(k, re))
+    add(kw("patternProperties", re), view.gate("object", forall(map_values(sub), member(ps))),
+      lit(s"patternProperties: value(s) for keys matching '$re' do not match"),
+      ErrorKind.PatternPropertiesK(re))
+  }
+
+  /** additionalProperties over the view's map: the keys that no
+    * `properties` name or `patternProperties` regex covers.
+    */
+  def additionalProperties(): Unit = node.additionalProperties.foreach { ap =>
+    def isKnown(k: Column): Column =
+      nameCovered(k, node.properties.map(_._1), node.patternProperties.map(_._1))
+    def check(core: Column, detail: String): Unit =
+      add(kw("additionalProperties"), view.gate("object", core), lit(detail),
+        ErrorKind.AdditionalPropertiesK)
+    ap match {
+      case Left(true) =>
+      case Left(false) =>
+        check(forall(map_keys(view.entries), isKnown), "additionalProperties: unexpected key(s)")
+      case Right(as) =>
+        val rem = map_filter(view.entries, (k, _) => !isKnown(k))
+        check(forall(map_values(rem), member(as)), "additionalProperties: value(s) do not match")
+    }
+  }
+
+  /** minProperties and maxProperties over the view's map. */
+  def propertyCounts(): Unit = {
+    def n = size(map_keys(view.entries))
+    node.minProperties.foreach { m =>
+      add(kw("minProperties"), view.gate("object", n >= m),
+        concat(lit("minProperties: got "), n.cast(StringType), lit(s", want >= $m")),
+        ErrorKind.MinProperties(m))
+    }
+    node.maxProperties.foreach { m =>
+      add(kw("maxProperties"), view.gate("object", n <= m),
+        concat(lit("maxProperties: got "), n.cast(StringType), lit(s", want <= $m")),
+        ErrorKind.MaxProperties(m))
+    }
+  }
+
   /** dependentSchemas (reference validator.go:307-312): while key k is
     * present, the whole value must match the paired schema.
     */
@@ -244,7 +458,7 @@ private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
       case Left(closure) => if (!closure.exists(_.all)) {
         val maxPrefix = closure.map(_.prefix).max
         val containsNodes = closure.flatMap(_.contains)
-        def contained(x: Column): Column = containsNodes.map(member(_, x))
+        def contained(x: Column): Column = containsNodes.map(member(_)(x))
           .reduceOption(_ || _).getOrElse(lit(false))
         lazy val rest = if (maxPrefix == 0) arr
           else slice(arr, lit(maxPrefix + 1), greatest(size(arr) - maxPrefix, lit(0)))
@@ -258,14 +472,14 @@ private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
               lit("unevaluatedItems: item(s) beyond the evaluated prefix " +
                 "match no contains schema"))
           case Right(us) =>
-            check(forall(rest, x => contained(x) || member(us, x)),
+            check(forall(rest, x => contained(x) || member(us)(x)),
               lit("unevaluatedItems: element(s) do not match"))
         }
       }
       case Right(contribs) => if (!contribs.exists(c => c.unconditional && c.all)) {
         val containsC = contribs.flatMap(c => c.contains.map((c.cond, c.unconditional, _)))
         def containedRt(x: Column): Column = containsC.map { case (cond, uncond, cn) =>
-          val m = member(cn, x)
+          val m = member(cn)(x)
           if (uncond) m else cond && m
         }.reduceOption(_ || _).getOrElse(lit(false))
         val allEvalCond = coalesce(contribs.filter(_.all).map(_.cond)
@@ -287,7 +501,7 @@ private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
                 "match no applicable contains schema"))
           case Right(us) =>
             check(allEvalCond ||
-              coalesce(forall(rest, x => containedRt(x) || member(us, x)), lit(false)),
+              coalesce(forall(rest, x => containedRt(x) || member(us)(x)), lit(false)),
               lit("unevaluatedItems: element(s) do not match"))
         }
       }
@@ -319,7 +533,7 @@ private[compile] final class KeywordWalker(val spec: Spec, val node: SchemaNode,
               "unevaluatedProperties: unexpected key(s)")
           case Right(us) =>
             val rem = map_filter(view.entries, (k, _) => !coalesce(isEval(k), lit(false)))
-            check(forall(map_values(rem), x => member(us, x)),
+            check(forall(map_values(rem), member(us)),
               "unevaluatedProperties: unevaluated value(s) do not match")
         }
       }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
-import KeywordWalker.{nameCovered, vac}
+import KeywordWalker.vac
 
 /** One compiled row-level check: a boolean predicate (TRUE = pass) plus the
   * three coordinates every violation row carries, mirroring the reference's
@@ -78,7 +78,7 @@ object CompileLimits {
     * NO data descent (a→a, a→b→a at the same instance position) stay
     * compile-time cycles and are rejected.
     */
-  @volatile var maxRefUnroll: Int = 4
+  final val maxRefUnroll: Int = 4
 
   /** Ceiling on the CORPUS-DERIVED unroll chosen by
     * [[SuiteCompiler.compileAdaptive]]: a depth-10^4 adversarial document
@@ -112,7 +112,7 @@ object CompileLimits {
     * 84-90). Generous for real specs: the whole conformance corpus plus the
     * clip suites compile under a few thousand expansions each.
     */
-  @volatile var maxCompileNodes: Int = 20000
+  final val maxCompileNodes: Int = 20000
 
   private val visits = new ThreadLocal[Array[Int]] {
     override def initialValue(): Array[Int] = Array(0)
@@ -124,9 +124,9 @@ object CompileLimits {
       throw graft.spec.SpecError(at,
         s"compile exceeds $maxCompileNodes schema-node expansions — " +
           s"recursive unroll (maxRefUnroll=$maxRefUnroll) over a highly " +
-          "self-referential schema explodes combinatorially; lower " +
-          "CompileLimits.maxRefUnroll, restructure the schema, or use the " +
-          "flat meta-validation path for schema-document linting")
+          "self-referential schema explodes combinatorially; restructure " +
+          "the schema, or use the flat meta-validation path for " +
+          "schema-document linting")
   }
 }
 
@@ -139,8 +139,9 @@ object CompileLimits {
   * Keywords that can never apply to the column's static type are pruned at
   * compile time (the lazy-conversion optimization of
   * /root/reference/validator.go:516-521, taken to its static conclusion).
-  * The type-independent keywords are [[KeywordWalker]]'s, shared with
-  * [[DynamicJson]]; this object supplies the typed view.
+  * Every keyword that does not depend on the representation is
+  * [[KeywordWalker]]'s, shared with [[DynamicJson]]; this object supplies
+  * the typed view and calls each walker step only where `dt` can hold it.
   *
   * NULL semantics: SQL NULL = absent value; every keyword is vacuous on NULL
   * (see [[graft.spec.SchemaNode]] scaladoc). Only `required` rejects NULL.
@@ -181,7 +182,7 @@ object RowCompiler {
     * reference's big.Rat comparison (/root/reference/util.go:322-325) via a
     * common DecimalType.
     */
-  private def constEq(v: Column, dt: DataType, node: JsonNode, at: String): Column = {
+  private def constEq(v: Column, dt: DataType, node: JsonNode): Column = {
     if (node.isNull) return v.isNull
     dt match {
       case _ if node.isNumber && isNumeric(dt) =>
@@ -216,7 +217,7 @@ object RowCompiler {
         // exact-rational fast/exact arms as a scalar const
         val elems = node.asScala.toSeq
         val eqs = elems.zipWithIndex.map { case (e, i) =>
-          constEq(element_at(v, i + 1), at2.elementType, e, at)
+          constEq(element_at(v, i + 1), at2.elementType, e)
         }
         (Seq(size(v) === elems.size: Column) ++ eqs).reduce(_ && _)
       case DateType | TimestampType | TimestampNTZType if node.isTextual =>
@@ -230,7 +231,7 @@ object RowCompiler {
         if (!constKeys.forall(st.fieldNames.contains)) lit(false)
         else {
           val eqs = constKeys.map(k =>
-            constEq(v.getField(k), st(k).dataType, node.get(k), at))
+            constEq(v.getField(k), st(k).dataType, node.get(k)))
           val absent = st.fields.filterNot(f => constKeys.contains(f.name))
             .map(f => v.getField(f.name).isNull).toSeq
           (eqs ++ absent).reduceOption(_ && _).getOrElse(lit(true))
@@ -239,10 +240,21 @@ object RowCompiler {
         val constKeys = node.fieldNames().asScala.toVector
         val eqs = constKeys.map(k =>
           array_contains(map_keys(v), k) &&
-            constEq(element_at(v, k), vt, node.get(k), at))
+            constEq(element_at(v, k), vt, node.get(k)))
         (Seq(size(map_keys(v)) === constKeys.size) ++ eqs).reduce(_ && _)
       case _ => lit(false) // type can never match the constant
     }
+  }
+
+  /** Core of a number keyword over a numeric column: `op` is an
+    * [[ExactRatPredExpr]] op code.
+    */
+  private def numberCore(v: Column, dt: DataType, op: Int, bd: BigDecimal): Column = op match {
+    case ExactRatPredExpr.Ge => boundCmp(v, dt, bd, op)(_ >= _)
+    case ExactRatPredExpr.Le => boundCmp(v, dt, bd, op)(_ <= _)
+    case ExactRatPredExpr.Gt => boundCmp(v, dt, bd, op)(_ > _)
+    case ExactRatPredExpr.Lt => boundCmp(v, dt, bd, op)(_ < _)
+    case ExactRatPredExpr.MultipleOf => multipleOfCore(v, dt, bd)
   }
 
   /** Pushdown-friendly numeric literal: native type when exact, decimal
@@ -283,6 +295,47 @@ object RowCompiler {
       // decimal column whose type can't hold the bound, or a bound outside
       // Decimal(38,12): big.Rat-exact compare (validator.go:522-543)
       ExactRatPredExpr.pred(v, op, bd.bigDecimal)
+  }
+
+  /** Exact rational divisibility: native pmod fast arms where provably
+    * exact, big.Rat-equivalent BigDecimal remainder everywhere else
+    * (reference validator.go:545-549; ExactRatPredExpr has the
+    * fidelity argument).
+    */
+  private def multipleOfCore(v: Column, dt: DataType, m: BigDecimal): Column = {
+    val decZero = lit(java.math.BigDecimal.ZERO).cast(Dec)
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType if m.isValidLong =>
+        pmod(v, lit(m.toLong)) === lit(0L)
+      case ByteType | ShortType | IntegerType | LongType if fitsDec(m) =>
+        // fractional divisor over an integral column: both Dec casts
+        // exact (≤19 integer digits always fit)
+        pmod(v.cast(Dec), lit(m.bigDecimal).cast(Dec)) === decZero
+      case FloatType | DoubleType if m.isValidLong =>
+        // integer divisor over a float column: the common case (integral
+        // value within 2^53) needs no decimal at all — IEEE fmod is
+        // EXACT. Cuts the per-row cost ~3x on TPC-H-style quantity
+        // columns. Non-integral or huge values take the exact-rational
+        // arm: a Decimal(38,12) cast would ROUND shortest reprs with
+        // >12 fractional digits (1.0000000000001 would silently PASS
+        // multipleOf 1e-12 where validator.go:546 fails it).
+        val dv = v.cast(DoubleType)
+        when(pmod(dv, lit(1.0)) === lit(0.0) &&
+            abs(dv) < lit(9.007199254740992e15),
+          pmod(dv, lit(m.toDouble)) === lit(0.0))
+          .otherwise(
+            ExactRatPredExpr.pred(v, ExactRatPredExpr.MultipleOf, m.bigDecimal))
+      case d: DecimalType
+          if d.scale <= 12 && d.precision - d.scale <= 26 && fitsDec(m) =>
+        // narrow-enough decimal column: the widening casts are exact
+        pmod(v.cast(Dec), lit(m.bigDecimal).cast(Dec)) === decZero
+      case _ =>
+        // float/double with a fractional divisor, wide decimal columns,
+        // divisors outside Decimal(38,12) (a cast would round — a
+        // sub-5e-13 divisor rounds to ZERO, ANSI DIVIDE_BY_ZERO on
+        // every row), or huge integral columns: exact rational remainder
+        ExactRatPredExpr.pred(v, ExactRatPredExpr.MultipleOf, m.bigDecimal)
+    }
   }
 
   /** Does `bd`'s exact rational value survive a value→nearest-double→
@@ -367,15 +420,22 @@ object RowCompiler {
     def compile(spec: Spec, node: SchemaNode, instPath: String,
         stack: List[(String, Int)], binder: Option[Binder], depth: Int): Seq[Check] =
       RowCompiler.compile(spec, node, v, dt, instPath, stack, binder, depth)
-    // the walker asks only where `dt` already is an array / object
+    // the walker asks only where `dt` already has the type
     def gate(jsonType: String, core: Column): Column = vac(v, core)
     def items: Column = v
+    def uniqueKey: Column = v
     def entries: Column = v
+    // compiles the member directly, not through `predicate`: one frame
+    // less on every descent (see KeywordWalker)
     def memberPredicate(spec: Spec, node: SchemaNode, x: Column,
-        stack: List[(String, Int)], depth: Int): Column = dt match {
-      case ArrayType(et, _)  => predicate(spec, node, x, et, stack, depth)
-      case MapType(_, vt, _) => predicate(spec, node, x, vt, stack, depth)
-      case _ => throw new IllegalStateException(s"no members in ${dt.simpleString}")
+        stack: List[(String, Int)], depth: Int): Column = {
+      val mt = dt match {
+        case ArrayType(et, _)  => et
+        case MapType(_, vt, _) => vt
+        case _ => throw new IllegalStateException(s"no members in ${dt.simpleString}")
+      }
+      RowCompiler.compile(spec, node, x, mt, "", stack, None, depth)
+        .map(_.pred).reduceOption(_ && _).getOrElse(lit(true))
     }
     def keyPresent(k: String): Column = dt match {
       case st: StructType =>
@@ -389,7 +449,15 @@ object RowCompiler {
         if (st.fieldNames.contains(k)) Some(!v.getField(k).isNotNull) else None
       case _ => super.dependentGate(k)
     }
+    def constEq(c: JsonNode): Column = RowCompiler.constEq(v, dt, c)
+    def rendered: Column = v.cast(StringType)
+    def numberCore(op: Int, bd: BigDecimal): Column = RowCompiler.numberCore(v, dt, op, bd)
+    def numberText: Column = rendered
+    def str: Column = v
     def oneOfDetail: String = " subschemas matched, want exactly 1"
+    def countsItemFailures: Boolean = true
+    def containsDetail(minC: Int, maxC: Option[Int]): String =
+      s" matching element(s), want >= $minC" + maxC.map(m => s" and <= $m").getOrElse("")
     def bindsIf: Boolean = false
   }
 
@@ -406,7 +474,6 @@ object RowCompiler {
     val w = new KeywordWalker(spec, node, new TypedView(v, dt), instPath, stack,
       binder, depth)
     import w.{add, kw, out}
-    def lstr(s: String): Column = lit(s)
     if (!w.enter()) return w.result
 
     // type (/root/reference/validator.go:98-103)
@@ -431,111 +498,16 @@ object RowCompiler {
         else Some(lit(false))
       ok.foreach { core =>
         add(kw("type"), vac(v, core),
-          concat(lstr(s"type: got $s value "), v.cast(StringType),
-            lstr(s", want ${ts.mkString("|")}")),
+          concat(lit(s"type: got $s value "), v.cast(StringType),
+            lit(s", want ${ts.mkString("|")}")),
           ErrorKind.TypeMismatch(ts))
       }
     }
 
-    // const (/root/reference/validator.go:106-113)
-    node.const.foreach { c =>
-      add(kw("const"), vac(v, constEq(v, dt, c, kw("const"))),
-        concat(lstr("const: got "), v.cast(StringType), lstr(s", want $c")),
-        ErrorKind.ConstK(c.toString))
-    }
-
-    // enum — type-compatible values only (prefilter analogue of
-    // /root/reference/schema.go:226-237)
-    node.enumVals.foreach { vals =>
-      val eqs = vals.map(c => constEq(v, dt, c, kw("enum")))
-      val core = eqs.reduceOption(_ || _).getOrElse(lit(false))
-      add(kw("enum"), vac(v, core),
-        concat(lstr("enum: got "), v.cast(StringType),
-          lstr(s", want one of ${vals.mkString(", ")}")),
-        ErrorKind.EnumK(vals.map(_.toString)))
-    }
-
-    // format (/root/reference/validator.go:136-146) — strings only, vacuous
-    // on other types (format.go:43-45)
-    node.format.foreach { f =>
-      if (dt == StringType || dt == BinaryType) {
-        Formats.get(f) match {
-          case Some(fn) =>
-            add(kw("format"), vac(v, fn(v)),
-              concat(lstr(s"format: "), v.cast(StringType), lstr(s" is not a valid $f")),
-              ErrorKind.FormatK(f))
-          case None if node.formatLenient => // compat: ignored annotation
-          case None =>
-            throw SpecError(kw("format"), s"unknown format '$f'")
-        }
-      }
-    }
-
-    // number keywords (/root/reference/validator.go:513-550)
-    if (isNumeric(dt)) {
-      node.minimum.foreach { b =>
-        add(kw("minimum"), vac(v, boundCmp(v, dt, b, ExactRatPredExpr.Ge)(_ >= _)),
-          concat(lstr("minimum: got "), v.cast(StringType), lstr(s", want >= $b")),
-          ErrorKind.Minimum(b))
-      }
-      node.maximum.foreach { b =>
-        add(kw("maximum"), vac(v, boundCmp(v, dt, b, ExactRatPredExpr.Le)(_ <= _)),
-          concat(lstr("maximum: got "), v.cast(StringType), lstr(s", want <= $b")),
-          ErrorKind.Maximum(b))
-      }
-      node.exclusiveMinimum.foreach { b =>
-        add(kw("exclusiveMinimum"), vac(v, boundCmp(v, dt, b, ExactRatPredExpr.Gt)(_ > _)),
-          concat(lstr("exclusiveMinimum: got "), v.cast(StringType), lstr(s", want > $b")),
-          ErrorKind.ExclusiveMinimum(b))
-      }
-      node.exclusiveMaximum.foreach { b =>
-        add(kw("exclusiveMaximum"), vac(v, boundCmp(v, dt, b, ExactRatPredExpr.Lt)(_ < _)),
-          concat(lstr("exclusiveMaximum: got "), v.cast(StringType), lstr(s", want < $b")),
-          ErrorKind.ExclusiveMaximum(b))
-      }
-      // exact rational divisibility: native pmod fast arms where provably
-      // exact, big.Rat-equivalent BigDecimal remainder everywhere else
-      // (/root/reference/validator.go:545-549; ExactRatPredExpr has the
-      // fidelity argument)
-      node.multipleOf.foreach { m =>
-        val decZero = lit(java.math.BigDecimal.ZERO).cast(Dec)
-        val core = dt match {
-          case ByteType | ShortType | IntegerType | LongType if m.isValidLong =>
-            pmod(v, lit(m.toLong)) === lit(0L)
-          case ByteType | ShortType | IntegerType | LongType if fitsDec(m) =>
-            // fractional divisor over an integral column: both Dec casts
-            // exact (≤19 integer digits always fit)
-            pmod(v.cast(Dec), lit(m.bigDecimal).cast(Dec)) === decZero
-          case FloatType | DoubleType if m.isValidLong =>
-            // integer divisor over a float column: the common case (integral
-            // value within 2^53) needs no decimal at all — IEEE fmod is
-            // EXACT. Cuts the per-row cost ~3x on TPC-H-style quantity
-            // columns. Non-integral or huge values take the exact-rational
-            // arm: a Decimal(38,12) cast would ROUND shortest reprs with
-            // >12 fractional digits (1.0000000000001 would silently PASS
-            // multipleOf 1e-12 where validator.go:546 fails it).
-            val dv = v.cast(DoubleType)
-            when(pmod(dv, lit(1.0)) === lit(0.0) &&
-                abs(dv) < lit(9.007199254740992e15),
-              pmod(dv, lit(m.toDouble)) === lit(0.0))
-              .otherwise(
-                ExactRatPredExpr.pred(v, ExactRatPredExpr.MultipleOf, m.bigDecimal))
-          case d: DecimalType
-              if d.scale <= 12 && d.precision - d.scale <= 26 && fitsDec(m) =>
-            // narrow-enough decimal column: the widening casts are exact
-            pmod(v.cast(Dec), lit(m.bigDecimal).cast(Dec)) === decZero
-          case _ =>
-            // float/double with a fractional divisor, wide decimal columns,
-            // divisors outside Decimal(38,12) (a cast would round — a
-            // sub-5e-13 divisor rounds to ZERO, ANSI DIVIDE_BY_ZERO on
-            // every row), or huge integral columns: exact rational remainder
-            ExactRatPredExpr.pred(v, ExactRatPredExpr.MultipleOf, m.bigDecimal)
-        }
-        add(kw("multipleOf"), vac(v, core),
-          concat(lstr("multipleOf: got "), v.cast(StringType), lstr(s", want multiple of $m")),
-          ErrorKind.MultipleOf(m))
-      }
-    }
+    w.constEnum()
+    // format: strings only, vacuous on other types (reference format.go:43-45)
+    if (dt == StringType || dt == BinaryType) w.format()
+    if (isNumeric(dt)) w.numbers()
 
     // string keywords (/root/reference/validator.go:432-511)
     if (dt == StringType) {
@@ -543,51 +515,34 @@ object RowCompiler {
       // /root/reference/validator.go:435-445
       node.minLength.foreach { n =>
         add(kw("minLength"), vac(v, length(v) >= n),
-          concat(lstr("minLength: got "), length(v).cast(StringType), lstr(s" chars, want >= $n")),
+          concat(lit("minLength: got "), length(v).cast(StringType), lit(s" chars, want >= $n")),
           ErrorKind.MinLength(n))
       }
       node.maxLength.foreach { n =>
         add(kw("maxLength"), vac(v, length(v) <= n),
-          concat(lstr("maxLength: got "), length(v).cast(StringType), lstr(s" chars, want <= $n")),
+          concat(lit("maxLength: got "), length(v).cast(StringType), lit(s" chars, want <= $n")),
           ErrorKind.MaxLength(n))
       }
-      // regex *search* via the pluggable engine (default rlike), matching
-      // /root/reference/validator.go:455-459 + the UseRegexpEngine hook
-      node.pattern.foreach { p =>
-        add(kw("pattern"), vac(v, Formats.patternMatch(v, p)),
-          concat(lstr("pattern: "), v.cast(StringType), lstr(s" does not match '$p'")),
-          ErrorKind.PatternK(p))
-      }
-      // contentEncoding: decodability of the encoded payload via the
-      // pluggable decoder registry (/root/reference/validator.go:468-475,
-      // content.go:17-24, RegisterContentEncoding compiler.go:85-90);
-      // downstream media-type/schema checks run over the DECODED value,
-      // mirroring the reference's decode-then-parse pipeline
-      val contentValue = node.contentEncoding match {
-        case Some(enc) =>
-          val decode = graft.functions.Content.encoding(enc).getOrElse(
-            throw SpecError(kw("contentEncoding"),
-              s"unknown encoding '$enc' (registered: ${graft.functions.Content.knownEncodings.mkString(", ")})"))
-          decode(v)
-        case None => v
-      }
+      w.pattern()
+      // contentEncoding: decodability of the encoded payload
+      // (reference validator.go:468-475); downstream media-type/schema
+      // checks run over the DECODED value, mirroring the reference's
+      // decode-then-parse pipeline
+      val contentValue = node.contentEncoding.fold(v)(w.decoder(_)(v))
       node.contentEncoding.foreach { enc =>
         add(kw("contentEncoding"), vac(v, contentValue.isNotNull),
-          lstr(s"contentEncoding: value is not valid $enc"),
+          lit(s"contentEncoding: value is not valid $enc"),
           ErrorKind.ContentEncodingK(enc))
       }
-      // contentMediaType via the pluggable media-type registry
-      // (RegisterContentMediaType, /root/reference/compiler.go:91-95); a
-      // decode failure is already reported by contentEncoding, downstream
-      // checks are vacuous on the null decoded value
+      // contentMediaType: a decode failure is already reported by
+      // contentEncoding, downstream checks are vacuous on the null decoded
+      // value
       node.contentMediaType.foreach { mt =>
-        val parseOk = graft.functions.Content.mediaType(mt).getOrElse(
-          throw SpecError(kw("contentMediaType"),
-            s"unknown media type '$mt' (registered: ${graft.functions.Content.knownMediaTypes.mkString(", ")})"))
+        val parseOk = w.mediaType(mt)
         add(kw("contentMediaType"),
           vac(v, when(contentValue.isNull, lit(true))
             .otherwise(coalesce(parseOk(contentValue), lit(false)))),
-          lstr(s"contentMediaType: value is not valid $mt"),
+          lit(s"contentMediaType: value is not valid $mt"),
           ErrorKind.ContentMediaTypeK(mt))
       }
       // contentSchema: recursive compile over from_json
@@ -635,56 +590,9 @@ object RowCompiler {
     }
 
     // array keywords (/root/reference/validator.go:324-430)
-    dt match {
-      case ArrayType(et, _) =>
-        node.minItems.foreach { n =>
-          add(kw("minItems"), vac(v, size(v) >= n),
-            concat(lstr("minItems: got "), size(v).cast(StringType), lstr(s", want >= $n")),
-            ErrorKind.MinItems(n))
-        }
-        node.maxItems.foreach { n =>
-          add(kw("maxItems"), vac(v, size(v) <= n),
-            concat(lstr("maxItems: got "), size(v).cast(StringType), lstr(s", want <= $n")),
-            ErrorKind.MaxItems(n))
-        }
-        if (node.uniqueItems) {
-          // hash-based dedup — the scalable arm of
-          // /root/reference/util.go:331-361
-          add(kw("uniqueItems"), vac(v, size(array_distinct(v)) === size(v)),
-            lstr("uniqueItems: duplicate items found"),
-            ErrorKind.UniqueItemsK)
-        }
-        val prefixN = node.prefixItems.size
-        node.prefixItems.zipWithIndex.foreach { case (ps, i) =>
-          val elem = element_at(v, i + 1)
-          val p = predicate(spec, ps, elem, et, stack, depth + 1)
-          add(kw("prefixItems", i.toString), vac(v, size(v) <= i || coalesce(p, lit(false))),
-            lstr(s"prefixItems/$i: element does not match"),
-            ErrorKind.PrefixItemsK(i))
-        }
-        node.items.foreach { is =>
-          val rest = if (prefixN == 0) v else slice(v, lit(prefixN + 1), greatest(size(v) - prefixN, lit(0)))
-          val p = forall(rest, x => coalesce(predicate(spec, is, x, et, stack, depth + 1), lit(false)))
-          val failed = size(filter(rest, x => !coalesce(predicate(spec, is, x, et, stack, depth + 1), lit(false))))
-          add(kw("items"), vac(v, p),
-            concat(lstr("items: "), failed.cast(StringType), lstr(" element(s) do not match")),
-            ErrorKind.ItemsK)
-        }
-        node.contains.foreach { cs =>
-          val cnt = size(filter(v, x => coalesce(predicate(spec, cs, x, et, stack, depth + 1), lit(false))))
-          val minC = node.minContains.getOrElse(1)
-          val core = node.maxContains match {
-            case Some(mx) => cnt >= minC && cnt <= mx
-            case None     => cnt >= minC
-          }
-          add(kw("contains"), vac(v, core),
-            concat(lstr("contains: "), cnt.cast(StringType),
-              lstr(s" matching element(s), want >= $minC" +
-                node.maxContains.map(m => s" and <= $m").getOrElse(""))),
-            ErrorKind.ContainsK(minC, node.maxContains))
-        }
-        w.unevaluatedItems()
-      case _ =>
+    if (dt.isInstanceOf[ArrayType]) {
+      w.arrays()
+      w.unevaluatedItems()
     }
 
     // object keywords (/root/reference/validator.go:198-322)
@@ -693,7 +601,7 @@ object RowCompiler {
         val fields = st.fieldNames.toSet
         node.requiredProps.foreach { k =>
           val core = if (fields.contains(k)) v.getField(k).isNotNull else lit(false)
-          add(kw("required"), vac(v, core), lstr(s"required: missing property '$k'"),
+          add(kw("required"), vac(v, core), lit(s"required: missing property '$k'"),
             ErrorKind.RequiredK(k))
         }
         node.properties.foreach { case (k, ps) =>
@@ -720,7 +628,7 @@ object RowCompiler {
             val core = reqs.map(r => if (fields.contains(r)) v.getField(r).isNotNull else lit(false))
               .reduceOption(_ && _).getOrElse(lit(true))
             add(kw("dependentRequired", k), vac(v, !v.getField(k).isNotNull || core),
-              lstr(s"dependentRequired: '$k' present but ${reqs.mkString(",")} missing"),
+              lit(s"dependentRequired: '$k' present but ${reqs.mkString(",")} missing"),
               ErrorKind.DependentRequiredK(k, reqs))
           }
         }
@@ -734,7 +642,7 @@ object RowCompiler {
               predicate(spec, ps, lit(f.name), StringType, stack, depth + 1), lit(false))
             add(kw("propertyNames"),
               vac(v, !v.getField(f.name).isNotNull || nameOk),
-              lstr(s"propertyNames: property name '${f.name}' does not match"),
+              lit(s"propertyNames: property name '${f.name}' does not match"),
               ErrorKind.PropertyNamesK(f.name))
           }
         }
@@ -743,12 +651,12 @@ object RowCompiler {
           .reduceOption(_ + _).getOrElse(lit(0))
         node.minProperties.foreach { n =>
           add(kw("minProperties"), vac(v, nProps >= n),
-            concat(lstr("minProperties: got "), nProps.cast(StringType), lstr(s", want >= $n")),
+            concat(lit("minProperties: got "), nProps.cast(StringType), lit(s", want >= $n")),
             ErrorKind.MinProperties(n))
         }
         node.maxProperties.foreach { n =>
           add(kw("maxProperties"), vac(v, nProps <= n),
-            concat(lstr("maxProperties: got "), nProps.cast(StringType), lstr(s", want <= $n")),
+            concat(lit("maxProperties: got "), nProps.cast(StringType), lit(s", want <= $n")),
             ErrorKind.MaxProperties(n))
         }
         // additionalProperties over a STRUCT: the field SET is closed, but a
@@ -767,7 +675,7 @@ object RowCompiler {
             case Left(false) =>
               extra.foreach { f =>
                 add(kw("additionalProperties"), vac(v, v.getField(f.name).isNull),
-                  lstr(s"additionalProperties: unexpected property '${f.name}'"),
+                  lit(s"additionalProperties: unexpected property '${f.name}'"),
                   ErrorKind.AdditionalPropertiesK)
               }
             case Right(as) =>
@@ -789,7 +697,7 @@ object RowCompiler {
             case Left(_) =>
               val absent = v.getField(f.name).isNull
               add(kw("unevaluatedProperties"), vac(v, evald.fold(absent)(absent || _)),
-                lstr(s"unevaluatedProperties: unexpected property '${f.name}'"),
+                lit(s"unevaluatedProperties: unexpected property '${f.name}'"),
                 ErrorKind.UnevaluatedPropertiesK)
             case Right(us) =>
               val cs = compile(spec, us, v.getField(f.name), f.dataType,
@@ -816,30 +724,17 @@ object RowCompiler {
         val keys = map_keys(v)
         node.requiredProps.foreach { k =>
           add(kw("required"), vac(v, array_contains(keys, k)),
-            lstr(s"required: missing property '$k'"),
+            lit(s"required: missing property '$k'"),
             ErrorKind.RequiredK(k))
         }
         node.properties.foreach { case (k, ps) =>
           val p = predicate(spec, ps, element_at(v, k), vt, stack, depth + 1)
           add(kw("properties", k), vac(v, !array_contains(keys, k) || coalesce(p, lit(false))),
-            lstr(s"properties/$k: value does not match"),
+            lit(s"properties/$k: value does not match"),
             ErrorKind.PropertiesK(k))
         }
-        node.patternProperties.foreach { case (re, ps) =>
-          // key matching goes through the pluggable regex engine, like
-          // `pattern` (the reference's UseRegexpEngine governs both,
-          // /root/reference/compiler.go:141-151)
-          val sub = map_filter(v, (k, _) => Formats.patternMatch(k, re))
-          val p = forall(map_values(sub), x => coalesce(predicate(spec, ps, x, vt, stack, depth + 1), lit(false)))
-          add(kw("patternProperties", re), vac(v, p),
-            lstr(s"patternProperties: value(s) for keys matching '$re' do not match"),
-            ErrorKind.PatternPropertiesK(re))
-        }
-        node.propertyNames.foreach { ps =>
-          val p = forall(keys, k => coalesce(predicate(spec, ps, k, StringType, stack, depth + 1), lit(false)))
-          add(kw("propertyNames"), vac(v, p), lstr("propertyNames: key does not match"),
-            ErrorKind.PropertyNamesK("*"))
-        }
+        w.patternProperties()
+        w.propertyNames()
         w.dependentSchemas()
         node.dependentRequired.foreach { case (k, reqs) =>
           val present = array_contains(keys, k)
@@ -847,37 +742,12 @@ object RowCompiler {
             .reduceOption(_ && _).getOrElse(lit(true))
           add(kw("dependentRequired", k),
             vac(v, !coalesce(present, lit(false)) || coalesce(core, lit(false))),
-            lstr(s"dependentRequired: '$k' present but ${reqs.mkString(",")} missing"),
+            lit(s"dependentRequired: '$k' present but ${reqs.mkString(",")} missing"),
             ErrorKind.DependentRequiredK(k, reqs))
         }
         w.unevaluatedProperties()
-        node.additionalProperties.foreach { ap =>
-          def isKnown(k: Column): Column =
-            nameCovered(k, node.properties.map(_._1), node.patternProperties.map(_._1))
-          ap match {
-            case Left(false) =>
-              add(kw("additionalProperties"), vac(v, forall(keys, isKnown)),
-                lstr("additionalProperties: unexpected key(s)"),
-                ErrorKind.AdditionalPropertiesK)
-            case Left(true) =>
-            case Right(as) =>
-              val rem = map_filter(v, (k, _) => !isKnown(k))
-              val p = forall(map_values(rem), x => coalesce(predicate(spec, as, x, vt, stack, depth + 1), lit(false)))
-              add(kw("additionalProperties"), vac(v, p),
-                lstr("additionalProperties: value(s) do not match"),
-                ErrorKind.AdditionalPropertiesK)
-          }
-        }
-        node.minProperties.foreach { n =>
-          add(kw("minProperties"), vac(v, size(keys) >= n),
-            concat(lstr("minProperties: got "), size(keys).cast(StringType), lstr(s", want >= $n")),
-            ErrorKind.MinProperties(n))
-        }
-        node.maxProperties.foreach { n =>
-          add(kw("maxProperties"), vac(v, size(keys) <= n),
-            concat(lstr("maxProperties: got "), size(keys).cast(StringType), lstr(s", want <= $n")),
-            ErrorKind.MaxProperties(n))
-        }
+        w.additionalProperties()
+        w.propertyCounts()
       case _ =>
     }
     w.composition()

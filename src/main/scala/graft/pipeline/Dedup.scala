@@ -52,12 +52,6 @@ object Dedup {
       countDistinct(md5(col(textCol))).as("n_distinct"))
       .withColumn("n_dups", col("n_docs") - col("n_distinct"))
 
-  /** Duplicate groups: fingerprint + member count (>1 only). */
-  def exactDupGroups(df: DataFrame, textCol: String): DataFrame =
-    df.groupBy(md5(col(textCol)).as("fingerprint"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-
   /** One MinHash band value: the min over shingles of hash(band, shingle).
     *
     * Hash engines:

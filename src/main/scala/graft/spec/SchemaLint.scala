@@ -143,6 +143,12 @@ object SchemaLint {
             customWalks: Map[Int, Walk] = Map.empty)
       : Vector[(String, Int, JsonNode)] = {
     val out = Vector.newBuilder[(String, Int, JsonNode)]
+    // the only custom meta a document can route through is its root's: an
+    // embedded resource declaring another one is skipped, whatever other
+    // documents `customs` was resolved for, so a document lints the same
+    // alone and in any catalog
+    val ownCustoms = Option(doc.get("$schema")).filter(_.isTextual)
+      .map(_.asText().stripSuffix("#")).flatMap(u => customs.get(u).map(u -> _)).toMap
     def emit(path: String, v0: Int, n: JsonNode): Unit = {
       // nested `$schema` is honored IFF the node carries the DECLARED
       // draft's identifier keyword (`id` for declared draft-4, `$id`
@@ -168,7 +174,7 @@ object SchemaLint {
             // declared draft's id spelling is unknowable without loading
             // the meta — accept either, with getID's string/fragment rules)
             if (path == "#" || hasDraftId(n, 4) || hasDraftId(n, 2020))
-              customs.get(u.stripSuffix("#")) match {
+              ownCustoms.get(u.stripSuffix("#")) match {
                 case Some(code) if code == badMetaCode =>
                   // loadable meta with an unsupported must-understand
                   // vocabulary: a synthetic row the catalog arms turn into
@@ -626,9 +632,9 @@ object SchemaLint {
     * the vacuous-valid root row, as before); a loadable meta with an
     * unsupported must-understand vocabulary (or a meta-chain cycle) maps
     * to [[badMetaCode]], so ITS documents fail loudly without killing the
-    * catalog job. Only ROOT-level `$schema` is discovered; an embedded
-    * resource declaring an undiscovered custom meta keeps the skip
-    * semantics.
+    * catalog job. Only ROOT-level `$schema` is discovered, and [[nodes]]
+    * routes a document through its own root's meta alone; an embedded
+    * resource declaring another custom meta keeps the skip semantics.
     */
   private def discoverCustomMetas(schemas: DataFrame,
                                   schemaCol: String): Map[String, Int] = {
@@ -664,15 +670,15 @@ object SchemaLint {
             "meta-chain")).as("detail")): _*)
   }
 
-  /** Lint a CATALOG of schema documents — one DataFrame pass:
-    * (idCol, schemaCol:string) in, (idCol, path, keyword, instance_path,
-    * detail) violation rows out. `metaUrl` is the DEFAULT draft for
-    * documents without their own official `$schema`; per-resource dialect
-    * switches inside documents are honored automatically.
+  /** The catalog arms' shared front: every document's node rows (idCol,
+    * `path` when `withPath`, governing draft code `v`, node text), the draft
+    * codes present among them, and whether some document names a meta with
+    * an unsupported vocabulary. Runs two driver actions: custom-meta
+    * discovery and the [[pruneToPresent]] distinct.
     */
-  def violationsForCatalog(schemas: DataFrame, idCol: String,
-                           schemaCol: String, metaUrl: String,
-                           perResourceDialects: Boolean = true): DataFrame = {
+  private def catalogNodes(schemas: DataFrame, idCol: String, schemaCol: String,
+                           metaUrl: String, perResourceDialects: Boolean,
+                           withPath: Boolean): (DataFrame, Vector[Int], Boolean) = {
     val version = draftVersion(metaUrl).getOrElse(throw SpecError(metaUrl,
       "not an official json-schema.org meta-schema URL"))
     import org.apache.spark.sql.functions._
@@ -689,8 +695,8 @@ object SchemaLint {
         customs, cWalks))
     val exploded0 = schemas
       .select(col(idCol), explode(enum0(col(schemaCol))).as("__n"))
-      .select(col(idCol), col("__n._1").as("path"), col("__n._2").as("v"),
-        col("__n._3").as("node"))
+      .select(Seq(col(idCol)) ++ (if (withPath) Seq(col("__n._1").as("path")) else Nil) ++
+        Seq(col("__n._2").as("v"), col("__n._3").as("node")): _*)
     // rows route to their GOVERNING draft's suite (per-resource $schema
     // switches): a homogeneous catalog leaves the other branches empty —
     // the filters keep each branch shuffle-free and AQE collapses empty
@@ -708,14 +714,31 @@ object SchemaLint {
     // frame resident per process), and releaseCache() frees the last.
     val exploded =
       if (versions.size > 1) persistTracked(exploded0) else exploded0
+    (exploded, pruneToPresent(exploded, versions, version),
+      customs.valuesIterator.contains(badMetaCode))
+  }
+
+  /** Lint a CATALOG of schema documents — one DataFrame pass:
+    * (idCol, schemaCol:string) in, (idCol, path, keyword, instance_path,
+    * detail) violation rows out. `metaUrl` is the DEFAULT draft for
+    * documents without their own official `$schema`; per-resource dialect
+    * switches inside documents are honored automatically. Runs driver
+    * actions at call time: custom-meta discovery and the distinct of the
+    * draft codes present (see [[pruneToPresent]]).
+    */
+  def violationsForCatalog(schemas: DataFrame, idCol: String,
+                           schemaCol: String, metaUrl: String,
+                           perResourceDialects: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val (exploded, kept, badMeta) = catalogNodes(schemas, idCol, schemaCol,
+      metaUrl, perResourceDialects, withPath = true)
     // per-draft branches, unioned, coordinates normalized
-    val main = pruneToPresent(exploded, versions, version).map { ver =>
+    val main = kept.map { ver =>
       val (suite, metaDocUrl) = suiteForCode(ver)
       normalized(Validator.violations(exploded.filter(col("v") === ver), suite,
         Seq(idCol, "path")), metaDocUrl)
     }.reduce(_ unionByName _)
-    if (customs.valuesIterator.contains(badMetaCode))
-      main.unionByName(badMetaViolations(exploded, Seq(idCol, "path")))
+    if (badMeta) main.unionByName(badMetaViolations(exploded, Seq(idCol, "path")))
     else main
   }
 
@@ -749,37 +772,21 @@ object SchemaLint {
     * per input document. The scale shape: node rows annotate in place and
     * fold with a map-side-partial boolean-AND aggregation (one hash-agg
     * shuffle on idCol); no join, no distinct. Custom-meta documents read
-    * valid (out of the gate's scope).
+    * valid (out of the gate's scope). Runs driver actions at call time:
+    * custom-meta discovery and the distinct of the draft codes present
+    * (see [[pruneToPresent]]).
     */
   def verdictsForCatalog(schemas: DataFrame, idCol: String,
                          schemaCol: String, metaUrl: String,
                          perResourceDialects: Boolean = true): DataFrame = {
-    val version = draftVersion(metaUrl).getOrElse(throw SpecError(metaUrl,
-      "not an official json-schema.org meta-schema URL"))
     import org.apache.spark.sql.functions._
-    val customs =
-      if (perResourceDialects) discoverCustomMetas(schemas, schemaCol)
-      else Map.empty[String, Int]
-    val cWalks = walksFor(customs)
-    val enum0 = udf((json: String) =>
-      if (json == null) Seq.empty[(String, Int, String)]
-      else enumerateRows(json, version, pinned = !perResourceDialects,
-        customs, cWalks))
-    val exploded0 = schemas
-      .select(col(idCol), explode(enum0(col(schemaCol))).as("__n"))
-      .select(col(idCol), col("__n._2").as("v"), col("__n._3").as("node"))
-    val versions = (if (perResourceDialects) allVersions
-                    else Vector(version)) ++
-      customs.values.filter(_ >= CUSTOM_BASE).toVector.distinct
-    // one walk per document — see violationsForCatalog (incl. lifecycle)
-    val exploded =
-      if (versions.size > 1) persistTracked(exploded0) else exploded0
-    val kept = pruneToPresent(exploded, versions, version)
+    val (exploded, kept, badMeta) = catalogNodes(schemas, idCol, schemaCol,
+      metaUrl, perResourceDialects, withPath = false)
     val branches = kept.map { ver =>
       Validator.annotate(exploded.filter(col("v") === ver),
           suiteForCode(ver)._1)
         .select(col(idCol), col("valid"))
-    } ++ (if (customs.valuesIterator.contains(badMetaCode))
+    } ++ (if (badMeta)
             Seq(exploded.filter(col("v") === badMetaCode)
               .select(col(idCol), lit(false).as("valid")))
           else Nil)

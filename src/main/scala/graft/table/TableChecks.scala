@@ -158,10 +158,6 @@ object TableChecks {
     agg.select((if (dists.size == 1) dists.head else greatest(dists: _*)).as("ks"))
   }
 
-  /** Eager KS (driver double) — convenience over [[ksDf]]. */
-  def ksAgainstQuantiles(df: DataFrame, column: String, refQuantiles: Seq[Double]): Double =
-    ksDf(df, column, refQuantiles).collect()(0).getDouble(0)
-
   /** Exact two-sample KS between two columns. Fully distributed: ECDFs are
     * computed per distinct value, then the cumulative counts use the classic
     * distributed prefix-sum — RANGE-partition the distinct values (so value

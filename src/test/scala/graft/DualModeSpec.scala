@@ -6,8 +6,9 @@ import graft.spec.{Spec, SpecError}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-/** Refs and composition are compiled by one keyword walker for both the
-  * typed compiler and the dynamic `json` mode. Each case below runs one
+/** Refs, composition and the keywords that do not depend on the value's
+  * representation are compiled by one keyword walker for both the typed
+  * compiler and the dynamic `json` mode. Each case below runs one
   * schema through both modes and must give the same outcome: the same
   * SpecError message, or the same checks (keyword path and instance path
   * relative to the schema root, ErrorKind) and the same violation rows on
@@ -97,6 +98,76 @@ class DualModeSpec extends SparkTestBase {
     test(s"typed and json modes agree: $name") {
       val t = run(typed, defs, schema, dt, doc)
       val d = run(dynamic, defs, schema, dt, doc)
+      expect(t)
+      assert(t == d, s"typed: $t\njson:  $d")
+    }
+  }
+
+  /** The keywords each compiler builds through one walker step. Each mode
+    * emits them in its own keyword order, so checks compare sorted.
+    */
+  private def sorted(o: Outcome): Outcome =
+    o.map { case (checks, rows) => (checks.sortBy(c => (c._1, c._2, c._3.toString)), rows) }
+
+  /** The keyword paths of the checks built, and of the violation rows. */
+  private def flags(checked: Seq[String], failed: Seq[String]): Outcome => Unit = o => {
+    val (checks, rows) = o.getOrElse(fail(s"unexpected $o"))
+    assert(checks.map(_._1) == checked.sorted && checks.forall(_._2 == ""), o)
+    assert(rows == failed.sorted.map((_, "")), o)
+  }
+
+  private def specError(message: String): Outcome => Unit =
+    o => assert(o.left.exists(_.startsWith(s"spec error at <root>/$message")), o)
+
+  /** (name, schema, typed-mode column type, instance, expected). */
+  private val keywordCases: Seq[(String, String, DataType, String, Outcome => Unit)] = Seq(
+    ("array keywords",
+      """{"minItems": 2, "maxItems": 3, "uniqueItems": true,
+        "prefixItems": [{"minimum": 10}], "items": {"maximum": 5},
+        "contains": {"const": 3}, "maxContains": 1}""",
+      ArrayType(LongType), "[1, 7, 7, 3, 3]",
+      flags(Seq("contains", "items", "maxItems", "minItems", "prefixItems/0", "uniqueItems"),
+        Seq("contains", "items", "maxItems", "prefixItems/0", "uniqueItems"))),
+    ("map-shaped object keywords",
+      """{"propertyNames": {"maxLength": 2}, "patternProperties": {"^x": {"minimum": 3}},
+        "additionalProperties": {"maximum": 9}, "minProperties": 1, "maxProperties": 2}""",
+      MapType(StringType, LongType), """{"x1": 1, "abc": 10, "b": 4}""",
+      flags(Seq("additionalProperties", "maxProperties", "minProperties",
+          "patternProperties/^x", "propertyNames"),
+        Seq("additionalProperties", "maxProperties", "patternProperties/^x", "propertyNames"))),
+    ("additionalProperties false over a map",
+      """{"patternProperties": {"^a": true}, "additionalProperties": false}""",
+      MapType(StringType, LongType), """{"a": 1, "z": 2}""",
+      flags(Seq("additionalProperties", "patternProperties/^a"), Seq("additionalProperties"))),
+    ("const and enum over numbers",
+      """{"const": 2.0, "enum": [1, 3, "x"]}""", LongType, "2",
+      flags(Seq("const", "enum"), Seq("enum"))),
+    ("const and enum over arrays",
+      """{"const": [1, 2.0], "enum": [[1], [1, 3]]}""", ArrayType(LongType), "[1, 2]",
+      flags(Seq("const", "enum"), Seq("enum"))),
+    ("bounds and multipleOf",
+      """{"minimum": 1, "maximum": 10.5, "exclusiveMinimum": 0,
+        "exclusiveMaximum": 10, "multipleOf": 0.5}""", DoubleType, "10.25",
+      flags(Seq("exclusiveMaximum", "exclusiveMinimum", "maximum", "minimum", "multipleOf"),
+        Seq("exclusiveMaximum", "multipleOf"))),
+    ("pattern and format",
+      """{"pattern": "^a", "format": "email"}""", StringType, "\"bob\"",
+      flags(Seq("format", "pattern"), Seq("format", "pattern"))),
+    ("an unknown format is a spec error",
+      """{"format": "no-such-format"}""", StringType, "\"x\"",
+      specError("format: unknown format 'no-such-format'")),
+    ("an unknown content encoding is a spec error",
+      """{"contentEncoding": "rot13"}""", StringType, "\"x\"",
+      specError("contentEncoding: unknown encoding 'rot13'")),
+    ("an unknown media type is a spec error",
+      """{"contentMediaType": "x/y"}""", StringType, "\"x\"",
+      specError("contentMediaType: unknown media type 'x/y'"))
+  )
+
+  keywordCases.foreach { case (name, schema, dt, doc, expect) =>
+    test(s"typed and json modes agree: $name") {
+      val t = sorted(run(typed, "{}", schema, dt, doc))
+      val d = sorted(run(dynamic, "{}", schema, dt, doc))
       expect(t)
       assert(t == d, s"typed: $t\njson:  $d")
     }

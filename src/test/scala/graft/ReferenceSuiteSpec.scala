@@ -68,6 +68,18 @@ class ReferenceSuiteSpec extends SparkTestBase {
     assert(empty.message.contains("no suite test files"))
   }
 
+  test("both suite readers keep schema digits beyond double precision") {
+    val root = java.nio.file.Files.createTempDirectory("graft_suite_digits")
+    val dir = java.nio.file.Files.createDirectories(root.resolve("tests/draft2020-12"))
+    java.nio.file.Files.write(dir.resolve("const.json"),
+      """[{"description": "wide const", "schema": {"const": 1.00000000000000000001},
+        "tests": [{"description": "one", "data": 1, "valid": false}]}]"""
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val groups = Queries5.suiteGroups(root.toString)
+    assert(groups.map(_._4) == Seq("""{"const":1.00000000000000000001}"""))
+    assert(SuiteRunner.groups(root.toString).map(_._4) == groups.map(_._4))
+  }
+
   test("unknown must-understand $vocabulary is a typed error") {
     val meta =
       """{"$schema":"https://json-schema.org/draft/2020-12/schema",

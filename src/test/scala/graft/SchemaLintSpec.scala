@@ -358,6 +358,27 @@ class SchemaLintSpec extends SparkTestBase {
       "plain_ok" -> true, "plain_bad" -> false), got.toString)
   }
 
+  test("an embedded resource's custom meta does not depend on the other documents in its catalog") {
+    import spark.implicits._
+    val x = serveMeta("embedded-x",
+      """{"$schema": "https://json-schema.org/draft/2020-12/schema",
+      "title": "no vocab - base official governs"}""")
+    // a: X at its root; b: official root, an embedded resource declaring X
+    // whose body is invalid under X's base meta
+    val a = s"""{"$$schema": ${q(x)}, "type": "object"}"""
+    val b = s"""{"$$defs": {"r": {"$$id": "https://example.com/embedded-r",
+      "$$schema": ${q(x)}, "minLength": -1}}}"""
+    def catalogRowsOfB(docs: Seq[(String, String)]) =
+      SchemaLint.violationsForCatalog(docs.toDF("id", "schema_json"), "id",
+          "schema_json", m2020)
+        .collect().toSeq.filter(_.getString(0) == "b")
+        .map(r => (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+        .sorted
+    val single = lint(b).map(v => (v.path, v.keyword, v.instancePath, v.detail)).sorted
+    assert(catalogRowsOfB(Seq("b" -> b)) == single)
+    assert(catalogRowsOfB(Seq("a" -> a, "b" -> b)) == single)
+  }
+
   // ------------------------------------------- driver path vs catalog arm
 
   test("single-document frames keep their column names, types and nullability") {
