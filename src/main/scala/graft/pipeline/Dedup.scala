@@ -1,7 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for large-scale training-data pipelines:
@@ -437,26 +442,63 @@ object Dedup {
     * standard last step of a dedup pipeline: candidate pairs → duplicate
     * CLUSTERS → one canonical document per cluster.
     *
-    * Algorithm: distributed Shiloach–Vishkin — per round (1) PROPAGATE:
-    * every vertex takes the min label among itself and its neighbors (one
-    * equi-join + one partial-agg groupBy, both shuffling O(edges) small
-    * rows; the convergence test is folded into the same aggregation — old
-    * and new labels come out of one groupBy); (2) HOOK: every label-tree
-    * root receives the best candidate seen anywhere in its tree (one
-    * O(vertices) groupBy on the old label + one join back); (3) SHORTCUT:
-    * each label is replaced by its label's label (`comp ← comp(comp)`, one
-    * labels-sized self-join). Hook + shortcut make the number of label
-    * trees at least halve per round, so rounds are O(log n) on ANY graph
-    * shape — a 10^4-node path (diameter 9999) converges in ≲14 rounds
-    * where plain propagation needs the full diameter (PipelineSpec pins
-    * the ≤2·log2(n) bound against a union-find oracle). Near-dup LSH
-    * graphs (unions of near-cliques) still converge in 2-4 rounds. Each
-    * round is lineage-CUT through a persisted RDD round-trip (see the
-    * in-loop comment: the self-join would otherwise double the plan tree —
-    * and, under localCheckpoint, square the propagated size estimate —
-    * every round). The loop is driver-bounded with an exact convergence
-    * check per round; hitting `maxIter` without convergence THROWS rather
-    * than silently returning partial components (no-silent-caps).
+    * Algorithm: distributed Shiloach–Vishkin over RDDs. The label state
+    * (id → comp) is hash-partitioned into `spark.sql.shuffle.partitions`
+    * partitions, co-partitioned with the symmetric edge RDD (u → v) that is
+    * built and persisted once per call. Each round:
+    *  (1) PROPAGATE: every vertex takes the min label among itself and its
+    *     neighbours — a narrow `zipPartitions` of edges and labels sends
+    *     each label along its edges, then `reduceByKey` (map-side combine)
+    *     keeps the min; the vertex's old label rides in the same record.
+    *  (2) HOOK: every label-tree root (an old label) receives the min new
+    *     label seen anywhere in its tree, and each vertex takes its root's.
+    *     Propagation + shortcut alone is NOT O(log n): once a region
+    *     collapses to a star, its root only learns a smaller label one hop
+    *     per round from the region's border (measured on the 10^4 path:
+    *     >40 rounds).
+    *  (3) SHORTCUT: comp ← min(comp, comp(comp)) (pointer jumping).
+    * Hook + shortcut make the tree count at least halve per round, so rounds
+    * are O(log n) on ANY graph shape — a 10^4-node path (diameter 9999)
+    * converges in ≲14 rounds where plain propagation needs the diameter
+    * (PipelineSpec pins ≤ 2·log2(n) against a union-find). Near-dup LSH
+    * graphs (unions of near-cliques) converge in 1-4 rounds. A round is one
+    * Spark job whose count is the exact convergence test; hitting `maxIter`
+    * without convergence THROWS rather than silently returning partial
+    * components (no-silent-caps).
+    *
+    * Skew valve: hook and shortcut are lookups keyed by a LABEL, and once a
+    * giant component forms most vertices share one. Each vertex partition
+    * asks the label's owner once per distinct label it holds and applies
+    * the answer locally, so a hot label costs at most numPartitions request
+    * rows (hook's min is combined per partition before it moves) instead of
+    * funnelling the component's rows through one task.
+    *
+    * Lineage: each round's state is cut with `RDD.checkpoint()` when the
+    * SparkContext has a checkpoint directory, so the loop survives executor
+    * loss, else with `RDD.localCheckpoint()` (blocks spill to disk; losing
+    * an executor fails the call). An RDD carries no SQL statistics, so no
+    * size estimate compounds across rounds (a `Dataset.localCheckpoint`
+    * leaf copies its origin's, and a self-join plan squared it per round).
+    *
+    * Do not reintroduce a bare `queryExecution.toRdd` over a persisted
+    * frame that is not yet materialized (the old loop's lineage cut did):
+    * `Dataset.persist` builds its cache under a cloned session, the bare
+    * `toRdd` materializes it under that clone's session id, and executors
+    * create one class loader per session id — every generated class then
+    * compiled again on every call. Measured on four calls over a persisted
+    * groupBy's self-join: four new loaders through the bare `toRdd`, none
+    * through `Dataset.rdd` (which the edge pass uses) or `count()`.
+    *
+    * The edge pass computes `pairs` once; a caller that also collects the
+    * pairs should persist them. Keys must be integral (tinyint to bigint —
+    * anything else throws at call time); id and comp take the wider of the
+    * two key types and their nullability, and a pair with a null end joins
+    * nothing. Every RDD the call persists is unpersisted before it returns
+    * or throws; the result comes back cached at `storage` plus disk (its
+    * lineage ends at the freed last round), so `clearCache()` frees it.
+    * Under `storage = NONE` the rounds still
+    * persist (at MEMORY_AND_DISK: there is no persistence-free variant), and
+    * the final round's blocks back the returned frame until it is dropped.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
@@ -468,177 +510,144 @@ object Dedup {
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, maxIter: Int = 25,
       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): (DataFrame, Int) = {
-    // persist the INPUT pairs before the symmetric union: its two branches
-    // are distinct plan subtrees over the same upstream, so an unpersisted
-    // `pairs` (typically the whole LSH-candidate + exact-verify pipeline)
-    // would execute end-to-end TWICE while edges materializes. Materialize
-    // EAGERLY: a lazy persist lets the union's two branches race per cache
-    // block and both recompute the upstream pipeline before one wins the
-    // store (measured ~2× the pipeline's wall at bench sf1)
-    val pairsP = maybePersist(pairs.select(col("a"), col("b")), storage)
-    if (storage != StorageLevel.NONE) pairsP.count()
-    // edges stays UNpersisted: it is a projection+union straight over the
-    // materialized pairs cache, so each consumer's re-read costs one cache
-    // scan — cheaper than maintaining (and materializing) a second cache
-    // layer of the same rows
-    val edges = pairsP.select(col("a").as("u"), col("b").as("v"))
-      .union(pairsP.select(col("b").as("u"), col("a").as("v")))
-    // seed with round 1 directly: comp₀ = min(self, direct neighbors) — one
-    // groupBy instead of a full join+agg+convergence round
-    var labels = maybePersist(
-      edges.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u").as("id"), least(col("u"), col("mn")).as("comp")),
-      storage)
-    // `cached` tracks the frame actually persisted each round: unpersist on
-    // a DERIVED frame (labels = next.drop("__old")) is a silent no-op —
-    // CacheManager only uncaches plans sameResult with the argument.
-    // From round 1 on, rounds live as persisted RDDs (`prevRdd`), freed one
-    // round later; the FINAL round's RDD is freed before returning (the
-    // result is re-cached through maybePersist so its lifecycle is the
-    // ordinary SQL CacheManager one — clearCache()-able; under
-    // storage = NONE the one final RDD stays pinned until the caller drops
-    // the returned frame, the price of a recompute-free result with zero
-    // SQL-cache footprint).
-    var cached = labels
-    var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-    // best-effort cleanup on ANY failure path (mid-round job failure,
-    // non-convergence): without it the per-round prop/hooked SQL caches
-    // and the round RDDs (including a partially materialized CURRENT
-    // round's) stay pinned in CacheManager/BlockManager for the rest of
-    // the session
-    var propCur: DataFrame = null
-    var hookedCur: DataFrame = null
-    var curRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-    def cleanupAll(): Unit = {
-      def quiet(f: => Unit): Unit = try f catch { case _: Throwable => }
-      if (storage != StorageLevel.NONE) {
-        quiet(pairsP.unpersist())
-        quiet(cached.unpersist())
-        if (propCur != null) quiet(propCur.unpersist())
-        if (hookedCur != null) quiet(hookedCur.unpersist())
-      }
-      curRdd.foreach(r => quiet(r.unpersist()))
-      prevRdd.foreach(r => quiet(r.unpersist()))
-    }
-    var iter = 0
-    var converged = false
+    val keyType = ccKeyType(pairs)
+    val nullable = pairs.schema("a").nullable || pairs.schema("b").nullable
+    val spark = pairs.sparkSession
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // disk-backed always: a round's lineage ends at its checkpoint and the
+    // result's at the last round's, so an evicted block could not recompute
+    val level =
+      if (storage == StorageLevel.NONE) StorageLevel.MEMORY_AND_DISK
+      else StorageLevel(useDisk = true, storage.useMemory, storage.useOffHeap,
+        storage.deserialized, storage.replication)
+    val held = mutable.ArrayBuffer.empty[RDD[_]]
+    def hold[T](r: RDD[T]): RDD[T] = { held += r; r.persist(level) }
+    def release(rs: RDD[_]*): Unit =
+      rs.foreach { r => held -= r; r.unpersist(blocking = false) }
     try {
-    while (!converged && iter < maxIter) {
-      // neighbor labels flow along edges; keep own label in the pool,
-      // TAGGED, so the same aggregation that computes the new label also
-      // carries the old one — the convergence test then reads the aggregated
-      // frame directly instead of paying a second join per round
-      val msgs = edges.join(labels.withColumnRenamed("id", "v"), Seq("v"))
-        .select(col("u").as("id"), col("comp"), lit(false).as("self"))
-      val prop = labels.select(col("id"), col("comp"), lit(true).as("self"))
-        .unionByName(msgs)
-        .groupBy("id")
-        .agg(min("comp").as("comp"),
-          min(when(col("self"), col("comp"))).as("__old"))
-      val propP = maybePersist(prop, storage)
-      propCur = propP
-      // HOOK (Shiloach–Vishkin): every tree root m receives the best
-      // candidate seen ANYWHERE in its tree this round — one map-side
-      // partial-min groupBy on the old label + a join back. Propagation +
-      // shortcut alone is NOT O(log n): once a region collapses to a star,
-      // its root only learns a smaller label by 1-hop propagation from the
-      // region boundary, and the shortcut composes through the stalled
-      // root (measured on the 10^4 path: plateaus of doubling length,
-      // >40 rounds). Hooking moves boundary information to the root in one
-      // round, so trees merge every round and the tree count at least
-      // halves — the classic O(log n) bound.
-      // Deliberately a groupBy+join, NOT min().over(partitionBy(__old)):
-      // once a giant component dominates, most rows share one __old and a
-      // window would funnel that component's ENTIRE row set through a
-      // single sort task with no skew mitigation — the aggregation is
-      // skew-free (map-side partials) and the hot-key join back is
-      // AQE-skew-splittable. prop is persisted for its two consumers.
-      val hooks = propP.groupBy(col("__old").as("__hid"))
-        .agg(min("comp").as("__hooked"))
-      // inner join: every __old is a group key of hooks (grouped from prop
-      // itself, and every id carries a self row so __old is never null),
-      // and __hooked = min(comp) over a group containing this row, so it
-      // IS the hooked label — no left/coalesce/least defence needed
-      val hooked = maybePersist(
-        propP.join(hooks, col("__old") === col("__hid"))
-          .select(col("id"), col("__hooked").as("comp"), col("__old")),
-        storage)
-      hookedCur = hooked
-      // SHORTCUT: comp ← comp(comp) (pointer jumping). Labels are always
-      // vertex ids (mins over vertex sets), so the lookup hits; labels
-      // only ever decrease (comp(x) ≤ x), so least() is monotone-safe.
-      val jumped = hooked.as("a").join(
-          hooked.select(col("id").as("__jid"), col("comp").as("__jcomp"))
-            .as("b"),
-          col("a.comp") === col("b.__jid"), "left")
-        .select(col("a.id").as("id"),
-          least(col("a.comp"),
-            coalesce(col("b.__jcomp"), col("a.comp"))).as("comp"),
-          col("a.__old").as("__old"))
-      // LINEAGE CUT, not a plain persist: the self-join references the
-      // previous round TWICE, so without a cut the logical plan tree (and
-      // every derived cost) DOUBLES per round — 2^rounds nodes by round 14,
-      // and Catalyst plan work dominates the job (measured: the 10^4-node
-      // path test ran 20 min pre-cut). localCheckpoint is NOT the right
-      // cut here: Spark copies the origin plan's Statistics onto the new
-      // LogicalRDD leaf, and join size estimation MULTIPLIES child
-      // sizeInBytes — the stat value then SQUARES every round (a BigInt
-      // doubling in bit-length per round; by round ~14 Catalyst multiplies
-      // million-bit integers — jstack showed BigInteger.multiplyToomCook3).
-      // The RDD round-trip below creates a fresh leaf with default stats:
-      // constant plan, constant stats, explicit block lifecycle. The round
-      // RDD is persisted even under storage = NONE — an unpersisted
-      // self-join chain recomputes 2^rounds times, so there is no
-      // persistence-free variant of this loop (round frames are O(vertices)
-      // slim rows; freed two rounds later below).
-      // disk-backed ALWAYS (MEMORY_ONLY included): predecessor rounds are
-      // already unpersisted, so a memory-evicted round block would recompute
-      // through the doubled lineage — the 2^rounds blowup this cut exists
-      // to prevent. MEMORY_AND_DISK spills instead of dropping. (Residual:
-      // executor LOSS still drops its disk blocks — a multi-hour cluster
-      // run that must survive that needs reliable checkpointing, out of
-      // scope for the round loop.)
-      val roundLevel =
-        if (storage == StorageLevel.NONE || storage == StorageLevel.MEMORY_ONLY)
-          StorageLevel.MEMORY_AND_DISK
-        else storage
-      // InternalRow-layer round-trip (GraftInternalRows): same fresh-leaf /
-      // default-stats cut as the old `jumped.rdd` + createDataFrame route,
-      // WITHOUT the per-row UnsafeRow→Row→UnsafeRow conversion that route
-      // pays every round (boxing every field of every vertex row twice)
-      val (next, nextRdd) =
-        org.apache.spark.sql.GraftInternalRows.cutLineage(jumped, roundLevel)
-      curRdd = Some(nextRdd) // tracked for failure-path cleanup of the count
-      val changed = next.filter(col("comp") =!= col("__old")).count()
-      if (storage != StorageLevel.NONE) cached.unpersist()
-      prevRdd.foreach(_.unpersist())
-      if (storage != StorageLevel.NONE) { propP.unpersist(); hooked.unpersist() }
-      propCur = null; hookedCur = null
-      cached = next
-      prevRdd = Some(nextRdd)
-      curRdd = None
-      labels = next.drop("__old")
-      converged = changed == 0
-      iter += 1
+      val edges = hold(pairs.select(col("a"), col("b")).rdd.flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else {
+          val (a, b) = (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
+          Iterator((a, b), (b, a))
+        }
+      }.partitionBy(part))
+      // seed with comp₀ = min(self, direct neighbours), which saves a round;
+      // edges are already partitioned, so this reduce shuffles nothing
+      var labels: RDD[(Long, Long)] = edges
+        .mapPartitions(_.map { case (u, v) => (u, math.min(u, v)) }, preservesPartitioning = true)
+        .reduceByKey(part, math.min(_: Long, _: Long))
+      var state: RDD[(Long, (Long, Long))] = null // (id, (comp, old comp))
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val prop = hold(propagate(edges, labels, part))
+        val hooked = hold(hook(prop, part))
+        val next = hold(shortcut(hooked, part))
+        if (spark.sparkContext.getCheckpointDir.isDefined) next.checkpoint()
+        else next.localCheckpoint()
+        val changed = next.filter { case (_, (c, old)) => c != old }.count()
+        release(Seq(prop, hooked) ++ Option(state): _*)
+        state = next
+        labels = next.mapValues(_._1)
+        converged = changed == 0
+        iter += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds — " +
+            "raise maxIter (Shiloach–Vishkin rounds are O(log n): the tree " +
+            "count at least halves per round, so 25 rounds cover ~2^25 trees)")
+      val toKey: Long => Any = keyType match {
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case _ => identity
+      }
+      val out = spark.createDataFrame(
+        state.map { case (id, (c, _)) => Row(toKey(id), toKey(c)) },
+        StructType(Seq(StructField("id", keyType, nullable),
+          StructField("comp", keyType, nullable))))
+      if (storage == StorageLevel.NONE) { held -= state; (out, iter) }
+      else {
+        // one job with no exchange; count() would run three
+        val cached = out.persist(level)
+        cached.foreachPartition((_: Iterator[Row]) => ())
+        (cached, iter)
+      }
+    } finally release(held.toSeq: _*)
+  }
+
+  /** The wider of the two key types; throws, naming the type, unless both
+    * are integral.
+    */
+  private def ccKeyType(pairs: DataFrame): DataType = {
+    val widening = Seq(ByteType, ShortType, IntegerType, LongType)
+    Seq("a", "b").map { c =>
+      val t = pairs.schema(c).dataType
+      if (!widening.contains(t))
+        throw new IllegalArgumentException(
+          s"connectedComponents: key column '$c' has type ${t.simpleString}; " +
+            "expected an integral type (tinyint, smallint, int or bigint)")
+      t
+    }.maxBy(widening.indexOf(_))
+  }
+
+  /** PROPAGATE: (id, (min label over id and its neighbours, id's label)). */
+  private def propagate(edges: RDD[(Long, Long)], labels: RDD[(Long, Long)],
+                        part: Partitioner): RDD[(Long, (Long, Long))] =
+    edges.zipPartitions(labels) { (es, ls) =>
+      val own = mutable.LongMap.empty[Long] ++= ls
+      own.iterator.map { case (id, c) => (id, (c, c)) } ++
+        es.map { case (u, v) => (v, (own(u), Long.MaxValue)) }
+    }.reduceByKey(part, (x, y) => (math.min(x._1, y._1), math.min(x._2, y._2)))
+
+  /** Per vertex partition, one request per distinct `label(v)`, carrying the
+    * partition's index and the min `payload(v)` over its vertices with that
+    * label, routed to the label's owner partition. Answers go back keyed by
+    * that index: a HashPartitioner sends an Int key k in [0, numPartitions)
+    * to partition k, so they zip with the partition that asked.
+    */
+  private def ask(state: RDD[(Long, (Long, Long))], part: Partitioner)(
+      label: ((Long, Long)) => Long,
+      payload: ((Long, Long)) => Long): RDD[(Long, (Int, Long))] =
+    state.mapPartitionsWithIndex { (pid, vs) =>
+      val m = mutable.LongMap.empty[Long]
+      vs.foreach { case (_, v) =>
+        val k = label(v)
+        m(k) = math.min(m.getOrElse(k, Long.MaxValue), payload(v))
+      }
+      m.iterator.map { case (k, p) => (k, (pid, p)) }
+    }.partitionBy(part)
+
+  /** HOOK: each vertex takes the min new label over its old label's tree. */
+  private def hook(prop: RDD[(Long, (Long, Long))],
+                   part: Partitioner): RDD[(Long, (Long, Long))] = {
+    val answers = ask(prop, part)(_._2, _._1).mapPartitions { reqs =>
+      val asked = reqs.toArray
+      val best = mutable.LongMap.empty[Long]
+      asked.foreach { case (m, (_, c)) => best(m) = math.min(best.getOrElse(m, c), c) }
+      asked.iterator.map { case (m, (pid, _)) => (pid, (m, best(m))) }
+    }.partitionBy(part)
+    prop.zipPartitions(answers, preservesPartitioning = true) { (vs, as) =>
+      val root = mutable.LongMap.empty[Long] ++= as.map(_._2)
+      vs.map { case (id, (_, old)) => (id, (root(old), old)) }
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "raise maxIter (Shiloach–Vishkin rounds are O(log n): the tree " +
-          "count at least halves per round, so 25 rounds cover ~2^25 trees)")
-    // hand the result back through the ordinary SQL-cache lifecycle: cache
-    // the final labels, materialize them, then free the last round's RDD —
-    // the caller's frame is clearCache()-able like every other cached frame
-    // in this module. Under storage = NONE the RDD stays (see above).
-    if (storage != StorageLevel.NONE) {
-      val out = labels.persist(storage)
-      out.count()
-      prevRdd.foreach(_.unpersist()); prevRdd = None
-      labels = out
+  }
+
+  /** SHORTCUT: comp ← min(comp, comp(comp)); labels are vertex ids, so the
+    * owner of a label always holds it.
+    */
+  private def shortcut(hooked: RDD[(Long, (Long, Long))],
+                       part: Partitioner): RDD[(Long, (Long, Long))] = {
+    val answers = hooked.zipPartitions(ask(hooked, part)(_._1, _ => 0L)) { (vs, reqs) =>
+      val own = mutable.LongMap.empty[Long] ++= vs.map { case (id, (c, _)) => (id, c) }
+      reqs.map { case (h, (pid, _)) => (pid, (h, own(h))) }
+    }.partitionBy(part)
+    hooked.zipPartitions(answers, preservesPartitioning = true) { (vs, as) =>
+      val jump = mutable.LongMap.empty[Long] ++= as.map(_._2)
+      vs.map { case (id, (c, old)) => (id, (math.min(c, jump(c)), old)) }
     }
-    if (storage != StorageLevel.NONE) pairsP.unpersist()
-    (labels, iter)
-    } catch { case t: Throwable => cleanupAll(); throw t }
   }
 
   /** Duplicate clusters from near-dup pairs: one row per component with the

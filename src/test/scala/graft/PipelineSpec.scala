@@ -2,7 +2,10 @@ package graft
 
 import graft.audio.AudioGen
 import graft.pipeline.{Dedup, Multimodal, SimSearch}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Pipeline operators with no SQL oracle: multimodal feature extraction,
   * LSH recall vs brute force, dedup invariants.
@@ -248,10 +251,16 @@ class PipelineSpec extends SparkTestBase {
 
   test("connected components over near-dup pairs match driver union-find") {
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5).select("a", "b")
-    val got = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // driver union-find with min-root convention
-    val es = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val got = components(Dedup.connectedComponents(pairs))
+    val exp = unionFind(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(got == exp, s"diff: ${got.toSet.diff(exp.toSet).take(3)}")
+    assert(got.nonEmpty)
+  }
+
+  /** Driver union-find with the min-root convention: vertex -> min id of
+    * its component.
+    */
+  private def unionFind(es: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)
@@ -261,9 +270,110 @@ class PipelineSpec extends SparkTestBase {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val exp = (es.map(_._1) ++ es.map(_._2)).distinct.map(k => k -> find(k)).toMap
-    assert(got == exp, s"diff: ${got.toSet.diff(exp.toSet).take(3)}")
-    assert(got.nonEmpty)
+    (es.map(_._1) ++ es.map(_._2)).distinct.map(k => k -> find(k)).toMap
+  }
+
+  private def components(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+
+  /** `n` disjoint 4-cliques with ids offset + 4c + m: the `neardup` shape. */
+  private def cliques(n: Int, offset: Long = 0L): Seq[(Long, Long)] =
+    (0 until n).flatMap { c =>
+      val ids = (0 until 4).map(m => offset + c * 4L + m)
+      for (i <- 0 until 4; j <- i + 1 until 4) yield (ids(i), ids(j))
+    }
+
+  private val ccGraphs: Seq[(String, () => Seq[(Long, Long)])] = Seq(
+    // the hub is not the min, so every leaf's label arrives through the hub
+    "a giant star (one hub, 10^4 leaves)" -> (() => (1L to 10000L).map(l => (77777L, l))),
+    "1000 disjoint 4-cliques" -> (() => cliques(1000)),
+    "a seeded random graph (3000 vertices, 3000 edges, random long ids)" -> { () =>
+      val rnd = new scala.util.Random(7)
+      val ids = Array.fill(3000)(rnd.nextLong())
+      Seq.fill(3000)((ids(rnd.nextInt(ids.length)), ids(rnd.nextInt(ids.length))))
+    })
+
+  ccGraphs.foreach { case (name, graph) =>
+    test(s"connected components equal driver union-find: $name") {
+      val es = graph()
+      val got = components(Dedup.connectedComponents(es.toDF("a", "b")))
+      val exp = unionFind(es)
+      assert(got == exp, s"diff: ${got.toSet.diff(exp.toSet).take(3)}")
+    }
+  }
+
+  test("connected components keep integral key types and nullability; other key types fail at call time") {
+    val ints = Dedup.connectedComponents(Seq((3, 1), (1, 2), (7, 9)).toDF("a", "b"))
+    assert(ints.schema == StructType(Seq(StructField("id", IntegerType, nullable = false),
+      StructField("comp", IntegerType, nullable = false))))
+    assert(ints.collect().map(r => (r.getInt(0), r.getInt(1))).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 9 -> 7))
+    // nullable int ids stay nullable; a pair with a null end joins nothing
+    val opt = Dedup.connectedComponents(
+      Seq((Option(3), Option(1)), (Option(7), Option.empty[Int])).toDF("a", "b"))
+    assert(opt.schema == StructType(Seq(StructField("id", IntegerType, nullable = true),
+      StructField("comp", IntegerType, nullable = true))))
+    assert(opt.collect().map(r => (r.getInt(0), r.getInt(1))).toMap == Map(1 -> 1, 3 -> 1))
+    // mixed widths widen to the wider type
+    assert(Dedup.connectedComponents(Seq((1, 2L)).toDF("a", "b")).schema.map(_.dataType) ==
+      Seq(LongType, LongType))
+    Seq("double" -> Seq((1.0, 2.0)).toDF("a", "b"),
+        "string" -> Seq(("x", "y")).toDF("a", "b")).foreach { case (typeName, df) =>
+      var err: IllegalArgumentException = null
+      val jobs = jobsStarted {
+        err = intercept[IllegalArgumentException](Dedup.connectedComponents(df))
+      }
+      assert(jobs == 0, s"$typeName keys ran $jobs jobs before failing")
+      assert(err.getMessage.contains(s"type $typeName"), err.getMessage)
+    }
+  }
+
+  test("connected components with a checkpoint dir: each round is reliably checkpointed, same labels") {
+    val es = ccGraphs.last._2()
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-checkpoint")
+    val sc = spark.sparkContext
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    sc.setCheckpointDir(dir.toString)
+    try {
+      val labels = Dedup.connectedComponents(es.toDF("a", "b"))
+      assert(components(labels) == unionFind(es))
+      assert(lineage(labels.rdd).exists(r => r.isCheckpointed && r.getCheckpointFile.nonEmpty),
+        "the final round's RDD is not reliably checkpointed")
+      labels.unpersist()
+    } finally {
+      sc.setCheckpointDir(null) // back to local checkpoints for the other tests
+      scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+    assert(sc.getCheckpointDir.isEmpty)
+  }
+
+  test("connected components release every RDD they persist, on success and on failure") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    def left = sc.getPersistentRDDs.keySet -- before
+    val path = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
+    Dedup.connectedComponents(path).collect()
+    spark.catalog.clearCache()
+    assert(left.isEmpty, s"still persisted after clearCache(): $left")
+    // one round cannot label a 200-node path: the call throws
+    intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 1))
+    assert(left.isEmpty, s"still persisted after a failed call: $left")
+  }
+
+  test("connected components: a repeat call over fresh pairs compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(offset: Long): Map[Long, Long] = {
+      val got = components(Dedup.connectedComponents(cliques(200, offset).toDF("a", "b")))
+      spark.catalog.clearCache()
+      got
+    }
+    run(0L) // warm-up
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val got = run(1000000L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the second call compiled generated code")
+    assert(got == unionFind(cliques(200, 1000000L)))
   }
 
   test("connected components: 10^4-node path graph converges in O(log n) rounds, equals union-find") {
@@ -280,7 +390,7 @@ class PipelineSpec extends SparkTestBase {
       Dedup.connectedComponentsWithRounds(pairs, maxIter = 40)
     val bound = 2 * (math.log(n) / math.log(2)).ceil.toInt
     assert(rounds <= bound, s"$rounds rounds > 2·log2($n) = $bound")
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = components(labels)
     val mn = ids.min
     assert(got.size == n)
     assert(got.values.forall(_ == mn),
