@@ -7,7 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash groupBy), MinHash+LSH banding, SimHash, and n-gram Jaccard.
@@ -23,18 +23,16 @@ import org.apache.spark.storage.StorageLevel
   *    and logged, not silent).
   *  - Exact-dup groupBy benefits from map-side partial aggregation; hot
   *    fingerprints (boilerplate docs) pre-aggregate per task.
+  *
+  * Cache contract: an operator's intermediate frames (shingles, bands,
+  * signatures, the connected-components result) are plain
+  * `persist(MEMORY_AND_DISK)` SQL cache entries, so the expensive scan pass
+  * runs once per call instead of once per consumer. The operator holds no
+  * handle to them and takes no storage option: the caller frees them with
+  * `unpersist` on the returned frame or `spark.catalog.clearCache()`, and
+  * long-lived drivers that loop over corpora clear between iterations.
   */
 object Dedup {
-
-  /** Cache lifecycle: the LSH/signature frames below are persisted so the
-    * expensive scan pass runs once per call instead of per consumer. The
-    * cache entries live until `spark.catalog.clearCache()` / session end —
-    * long-lived drivers that loop over corpora should either clear between
-    * iterations or pass `storage = StorageLevel.NONE` to trade recompute
-    * for zero pinned blocks.
-    */
-  private def maybePersist(df: DataFrame, storage: StorageLevel): DataFrame =
-    if (storage == StorageLevel.NONE) df else df.persist(storage)
 
   def tokens(text: Column): Column = split(text, " ")
 
@@ -130,10 +128,9 @@ object Dedup {
   def minhashCandidates(df: DataFrame, keyCol: String, textCol: String,
                         numBands: Int = 8, shingleN: Int = 3,
                         maxBucket: Long = 1000L,
-                        hashEngine: String = "md5",
-                        storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val bands = maybePersist(
-      minhashBands(df, keyCol, textCol, numBands, shingleN, hashEngine), storage)
+                        hashEngine: String = "md5"): DataFrame = {
+    val bands = minhashBands(df, keyCol, textCol, numBands, shingleN, hashEngine)
+      .persist(MEMORY_AND_DISK)
     candidatesFromBands(bands, keyCol, maxBucket)
   }
 
@@ -194,15 +191,14 @@ object Dedup {
     */
   def jaccardPairs(df: DataFrame, keyCol: String, textCol: String,
                    shingleN: Int = 3, threshold: Double = 0.5,
-                   maxDf: Long = 100000L,
-                   storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                   maxDf: Long = 100000L): DataFrame = {
     // the per-doc shingle ARRAYS are the persisted root: the exploded frame
     // (both self-join sides + the valve's document-frequency agg) derives
     // from the cache, and the per-doc sizes read size(array) straight off
     // it — the former sizes groupBy over every exploded row (one full
     // exchange) is gone
-    val shingled = maybePersist(
-      shingledFrame(df, keyCol, textCol, shingleN), storage)
+    val shingled = shingledFrame(df, keyCol, textCol, shingleN)
+      .persist(MEMORY_AND_DISK)
     val sh = shingled.select(col(keyCol).as("k"),
       explode(col("__graft_sh")).as("s"))
     val filtered =
@@ -247,15 +243,14 @@ object Dedup {
   def jaccardPairsLsh(df: DataFrame, keyCol: String, textCol: String,
                       shingleN: Int = 3, threshold: Double = 0.5,
                       numBands: Int = 8, maxBucket: Long = 1000L,
-                      hashEngine: String = "md5",
-                      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                      hashEngine: String = "md5"): DataFrame = {
     // ONE tokenize+shingle pass: the persisted shingled frame feeds both
     // the band index (candidate generation) and the exact verification —
     // previously each side ran its own full pass
-    val shingled = maybePersist(
-      shingledFrame(df, keyCol, textCol, shingleN), storage)
-    val bands = maybePersist(
-      bandsFromShingled(shingled, keyCol, numBands, hashEngine), storage)
+    val shingled = shingledFrame(df, keyCol, textCol, shingleN)
+      .persist(MEMORY_AND_DISK)
+    val bands = bandsFromShingled(shingled, keyCol, numBands, hashEngine)
+      .persist(MEMORY_AND_DISK)
     val cand = candidatesFromBands(bands, keyCol, maxBucket)
     // exact verification by ARRAY INTERSECTION on the per-doc shingle sets
     // (two equi-joins attaching each side's array) instead of exploding
@@ -333,9 +328,9 @@ object Dedup {
     * groupBy, same shuffle shape as [[simhash16]].
     *
     * Output: (k, simhash, band0..band3) where bandK packs sign bits
-    * 16K..16K+15 as a non-negative int — computed from the sign sums, not by
-    * shifting the packed code, so no engine-specific negative-shift
-    * semantics are involved.
+    * 16K..16K+15 as a non-negative int: `(simhash >>> 16K) & 0xFFFF`, since
+    * band K's bit j is code bit 16K+j (the unsigned shift and the mask keep
+    * the sign bit out of band3's value).
     */
   def simhash64(df: DataFrame, keyCol: String, textCol: String): DataFrame = {
     val tok = fanOut(df.select(col(keyCol), col(textCol)))
@@ -355,28 +350,32 @@ object Dedup {
     // instead of 64 ±1 sums, and the per-token update is pure bit math.
     // Equivalence to the old per-bit sign sum: s_b = Σ±1 = 2·count_b − n,
     // so s_b ≥ 0 ⟺ 2·count_b ≥ n — bit-identical codes and bands.
-    val sums = (0 until 32).map { b =>
+    val packed = (0 until 32).map { b =>
       val sh = (7 - b / 4) * 4 + b % 4
       sum(shiftright(col("w0"), sh).bitwiseAND(lit(1L)) +
         shiftleft(shiftright(col("w1"), sh).bitwiseAND(lit(1L)), 32))
-        .as(s"p_$b")
-    } :+ count(lit(1)).as("__n")
-    val agg = withWords.groupBy("k").agg(sums.head, sums.tail: _*)
+    }
     def cnt(b: Int): Column =
-      if (b < 32) col(s"p_$b").bitwiseAND(lit(0xFFFFFFFFL))
-      else shiftright(col(s"p_${b - 32}"), 32)
-    def bitSet(b: Int): Column = cnt(b) * 2 >= col("__n")
+      if (b < 32) packed(b).bitwiseAND(lit(0xFFFFFFFFL))
+      else shiftright(packed(b - 32), 32)
+    def bitSet(b: Int): Column = cnt(b) * 2 >= count(lit(1))
+    // the bits are disjoint, so OR packs them with no overflow-checked adds
     val code = (0 until 64).map { b =>
       // 1L << 63 wraps to Long.MinValue — intentional: bit 63 is the sign
       // bit of the packed two's-complement code
       when(bitSet(b), lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    }.reduce(_ bitwiseOR _)
+    // The code stays the aggregate's own result expression (Spark computes
+    // each repeated sum and the count once), and the bands read it: in a
+    // projection above the aggregate, a consumer's filter on the code or a
+    // band is rewritten to repeat all 64 sign tests per reference, and
+    // that stage outgrows the JVM's 64 KB method limit in codegen.
     val bands = (0 until 4).map { k =>
-      (0 until 16).map { j =>
-        when(bitSet(16 * k + j), lit(1 << j)).otherwise(lit(0))
-      }.reduce(_ + _).as(s"band$k")
+      shiftrightunsigned(col("simhash"), 16 * k).bitwiseAND(lit(0xFFFFL))
+        .cast("int").as(s"band$k")
     }
-    agg.select(col("k") +: code.as("simhash") +: bands: _*)
+    withWords.groupBy("k").agg(code.as("simhash"))
+      .select(col("k") +: col("simhash") +: bands: _*)
   }
 
   /** Near-dup pairs at Hamming distance ≤ maxHamming over 64-bit SimHash,
@@ -394,10 +393,9 @@ object Dedup {
     */
   def simhashNearDup64(df: DataFrame, keyCol: String, textCol: String,
                        maxHamming: Int = 3,
-                       maxBucket: Long = 100000L,
-                       storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                       maxBucket: Long = 100000L): DataFrame = {
     require(maxHamming <= 3, "4 bands guarantee recall only up to distance 3")
-    val sig = maybePersist(simhash64(df, keyCol, textCol), storage)
+    val sig = simhash64(df, keyCol, textCol).persist(MEMORY_AND_DISK)
     val exploded = sig.select(col("k"), col("simhash"),
       posexplode(array(col("band0"), col("band1"), col("band2"), col("band3")))
         .as(Seq("band", "bv")))
@@ -493,35 +491,26 @@ object Dedup {
     * pairs should persist them. Keys must be integral (tinyint to bigint —
     * anything else throws at call time); id and comp take the wider of the
     * two key types and their nullability, and a pair with a null end joins
-    * nothing. Every RDD the call persists is unpersisted before it returns
-    * or throws; the result comes back cached at `storage` plus disk (its
-    * lineage ends at the freed last round), so `clearCache()` frees it.
-    * Under `storage = NONE` the rounds still
-    * persist (at MEMORY_AND_DISK: there is no persistence-free variant), and
-    * the final round's blocks back the returned frame until it is dropped.
+    * nothing. Every RDD the call persists (at MEMORY_AND_DISK: a round's
+    * lineage ends at its checkpoint and the result's at the last round's,
+    * so an evicted block could not recompute) is unpersisted before it
+    * returns or throws; the result comes back as a MEMORY_AND_DISK SQL
+    * cache entry, so `unpersist` or `clearCache()` frees it.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    connectedComponentsWithRounds(pairs, maxIter, storage)._1
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponentsWithRounds(pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the number of rounds it took — exposed so
     * tests can pin the O(log n) convergence bound.
     */
   private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, maxIter: Int = 25,
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): (DataFrame, Int) = {
+      pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
     val keyType = ccKeyType(pairs)
     val nullable = pairs.schema("a").nullable || pairs.schema("b").nullable
     val spark = pairs.sparkSession
     val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // disk-backed always: a round's lineage ends at its checkpoint and the
-    // result's at the last round's, so an evicted block could not recompute
-    val level =
-      if (storage == StorageLevel.NONE) StorageLevel.MEMORY_AND_DISK
-      else StorageLevel(useDisk = true, storage.useMemory, storage.useOffHeap,
-        storage.deserialized, storage.replication)
     val held = mutable.ArrayBuffer.empty[RDD[_]]
-    def hold[T](r: RDD[T]): RDD[T] = { held += r; r.persist(level) }
+    def hold[T](r: RDD[T]): RDD[T] = { held += r; r.persist(MEMORY_AND_DISK) }
     def release(rs: RDD[_]*): Unit =
       rs.foreach { r => held -= r; r.unpersist(blocking = false) }
     try {
@@ -568,13 +557,10 @@ object Dedup {
         state.map { case (id, (c, _)) => Row(toKey(id), toKey(c)) },
         StructType(Seq(StructField("id", keyType, nullable),
           StructField("comp", keyType, nullable))))
-      if (storage == StorageLevel.NONE) { held -= state; (out, iter) }
-      else {
-        // one job with no exchange; count() would run three
-        val cached = out.persist(level)
-        cached.foreachPartition((_: Iterator[Row]) => ())
-        (cached, iter)
-      }
+      // one job with no exchange; count() would run three
+      val cached = out.persist(MEMORY_AND_DISK)
+      cached.foreachPartition((_: Iterator[Row]) => ())
+      (cached, iter)
     } finally release(held.toSeq: _*)
   }
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Deterministic sampling operators for training-data pipelines.
   *
@@ -80,16 +80,14 @@ object Sampling {
     * hash uniformity — astronomically unlikely with md5), this THROWS rather
     * than returning a silently short sample; raise `margin` to retry.
     *
-    * The returned frame is persisted at `storage` (the under-fill
-    * verification must not recompute the full scan); callers owning a
-    * long-lived session should `unpersist()` it when done, or pass
-    * `StorageLevel.NONE` to skip both persist and verification (trusted
-    * uniform keys only).
+    * Cache contract (as for every pipeline operator): the returned frame is
+    * a plain `persist(MEMORY_AND_DISK)` SQL cache entry, so the under-fill
+    * verification does not recompute the full scan. The operator keeps no
+    * handle to it; the caller frees it with `unpersist()` or
+    * `spark.catalog.clearCache()`.
     */
   def stratifiedExactScaled(df: DataFrame, strataCol: String, keyCol: String,
-                            n: Int, margin: Double = 6.0,
-                            storage: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+                            n: Int, margin: Double = 6.0): DataFrame = {
     require(n > 0, s"sample size must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
     val counts = df.groupBy(strataCol).agg(count(lit(1)).as("__graft_n"))
@@ -97,12 +95,12 @@ object Sampling {
     // hashBucket value including the ~2^-53 round-up-to-1.0 edge.
     // thr is O(strata) rows — persisted so the under-fill verification
     // touches it instead of re-scanning the input for a second count
-    val thr0 = counts.select(col(strataCol).as("__graft_stratum"),
+    val thr = counts.select(col(strataCol).as("__graft_stratum"),
       col("__graft_n"),
       when(col("__graft_n") <= n, lit(2.0))
         .otherwise((lit(n.toDouble) + lit(margin) * lit(math.sqrt(n.toDouble))
           + lit(10.0)) / col("__graft_n")).as("__graft_thr"))
-    val thr = if (storage == StorageLevel.NONE) thr0 else thr0.persist(storage)
+      .persist(MEMORY_AND_DISK)
     // NULL-SAFE join: a null stratum is a stratum too (Window.partitionBy
     // treats null as a partition — the window arm samples it, so must we)
     val filtered = df.join(broadcast(thr),
@@ -115,8 +113,7 @@ object Sampling {
       .filter(col("__graft_rank") <= n)
     val sample = trimmed.drop("__graft_rank", "__graft_thr", "__graft_n",
       "__graft_stratum")
-    if (storage == StorageLevel.NONE) return sample
-    val persisted = sample.persist(storage) // returned frame — caller unpersists
+    val persisted = sample.persist(MEMORY_AND_DISK) // returned frame — caller unpersists
     val bad = thr.join(
         persisted.groupBy(strataCol).agg(count(lit(1)).as("__graft_got")),
         col(strataCol) <=> col("__graft_stratum"), "left")

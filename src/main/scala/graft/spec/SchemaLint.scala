@@ -6,6 +6,7 @@ import graft.compile.{CompiledSuite, SuiteCompiler}
 import graft.exec.Validator
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import scala.jdk.CollectionConverters._
 
@@ -39,28 +40,6 @@ import scala.jdk.CollectionConverters._
 object SchemaLint {
 
   private val mapper = new ObjectMapper()
-
-  // the one live node-frame cache for mixed-dialect catalog lints: the
-  // returned frames are lazy so the blocks must outlive the call, but a
-  // long-lived session linting catalog after catalog must not accumulate
-  // them — each new lint releases the previous cache (recompute-correct:
-  // unpersist only drops caching, never data)
-  @volatile private var lastPersisted: Option[DataFrame] = None
-
-  private def persistTracked(df: DataFrame): DataFrame = synchronized {
-    lastPersisted.foreach(_.unpersist(blocking = false))
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastPersisted = Some(p)
-    p
-  }
-
-  /** Free the node-frame cache held for the most recent catalog lint (the
-    * caller is done with its result frames).
-    */
-  def releaseCache(): Unit = synchronized {
-    lastPersisted.foreach(_.unpersist(blocking = false))
-    lastPersisted = None
-  }
 
   /** Official ROOT meta-schema URL → draft version (http/https, optional
     * trailing '#'; bare `/schema` = latest, loader.go:86-88). Single source
@@ -708,12 +687,11 @@ object SchemaLint {
     // ONE walk per document: with multiple draft branches the exploded
     // node frame is persisted, so every branch scans the same in-memory
     // blocks instead of re-running the parse+walk UDF once per draft
-    // (PlanShapeSpec pins the invocation count). Cache lifecycle: the
-    // returned frame is lazy, so the blocks must outlive this call — each
-    // NEW catalog lint releases the previous call's cache (at most one node
-    // frame resident per process), and releaseCache() frees the last.
+    // (PlanShapeSpec pins the invocation count). The returned frame is
+    // lazy, so the blocks outlive this call: a plain MEMORY_AND_DISK cache
+    // entry that the caller frees with spark.catalog.clearCache()
     val exploded =
-      if (versions.size > 1) persistTracked(exploded0) else exploded0
+      if (versions.size > 1) exploded0.persist(MEMORY_AND_DISK) else exploded0
     (exploded, pruneToPresent(exploded, versions, version),
       customs.valuesIterator.contains(badMetaCode))
   }
@@ -725,6 +703,11 @@ object SchemaLint {
     * switches inside documents are honored automatically. Runs driver
     * actions at call time: custom-meta discovery and the distinct of the
     * draft codes present (see [[pruneToPresent]]).
+    *
+    * Cache contract: when more than one draft branch is planned, the node
+    * frame is a plain `persist(MEMORY_AND_DISK)` SQL cache entry that backs
+    * the returned lazy frame. No lint frees another's: the caller frees it
+    * with `spark.catalog.clearCache()` once done with the result.
     */
   def violationsForCatalog(schemas: DataFrame, idCol: String,
                            schemaCol: String, metaUrl: String,
@@ -774,7 +757,8 @@ object SchemaLint {
     * shuffle on idCol); no join, no distinct. Custom-meta documents read
     * valid (out of the gate's scope). Runs driver actions at call time:
     * custom-meta discovery and the distinct of the draft codes present
-    * (see [[pruneToPresent]]).
+    * (see [[pruneToPresent]]). Caches as [[violationsForCatalog]] does: the
+    * caller frees the node frame with `spark.catalog.clearCache()`.
     */
   def verdictsForCatalog(schemas: DataFrame, idCol: String,
                          schemaCol: String, metaUrl: String,

@@ -673,35 +673,26 @@ object Spec {
     */
   def parse(root: JsonNode, compat: Boolean): Spec = parse(root, compat, None)
 
-  /** Parse with a known retrieval URL (`loadUrl`): the document base for
-    * RELATIVE `$ref` / relative nested `$id` resolution. The root's own
-    * absolute `$id` takes precedence over the retrieval URL (RFC 3986 §5.1,
-    * the reference's base-URI behavior, /root/reference/roots.go:103-150).
-    */
-  private[graft] def parse(root: JsonNode, compat: Boolean,
-                           loadUrl: Option[String]): Spec =
-    parse(root, compat, loadUrl, jvAssert = None)
-
-  /** Parse in JV-PARITY ASSERTION mode: `jvAssert = Some((assertFormat,
-    * assertContent))` applies the reference CLI's draft-dependent assertion
-    * defaults with the two flags as explicit overrides
-    * (/root/reference/cmd/jv/main.go:28-29, compiler.go:47-66); `None`
-    * keeps engine-native semantics (format/content* always asserted).
-    */
-  private[graft] def parse(root: JsonNode, compat: Boolean,
-                           loadUrl: Option[String],
-                           jvAssert: Option[(Boolean, Boolean)]): Spec =
-    parse(root, compat, loadUrl, jvAssert, defaultDraftUrl = None)
-
-  /** `defaultDraftUrl` = the compiler-wide default draft for documents
-    * lacking `$schema` (the reference's DefaultDraft / jv -d,
-    * /root/reference/compiler.go:30-36) — applied per external document in
-    * [[Spec.externalDoc]] and to this root when it carries no `$schema`.
+  /** The full parse behind the public overloads.
+    *  - `loadUrl`: the known retrieval URL, the document base for RELATIVE
+    *    `$ref` / relative nested `$id` resolution. The root's own absolute
+    *    `$id` takes precedence over it (RFC 3986 §5.1, the reference's
+    *    base-URI behavior, /root/reference/roots.go:103-150).
+    *  - `jvAssert = Some((assertFormat, assertContent))`: JV-PARITY
+    *    ASSERTION mode, the reference CLI's draft-dependent assertion
+    *    defaults with the two flags as explicit overrides
+    *    (/root/reference/cmd/jv/main.go:28-29, compiler.go:47-66); `None`
+    *    keeps engine-native semantics (format/content* always asserted).
+    *  - `defaultDraftUrl`: the compiler-wide default draft for documents
+    *    lacking `$schema` (the reference's DefaultDraft / jv -d,
+    *    /root/reference/compiler.go:30-36), applied per external document
+    *    in [[Spec.externalDoc]] and to this root when it carries no
+    *    `$schema`.
     */
   private[graft] def parse(root: JsonNode, compat: Boolean,
                            loadUrl: Option[String],
-                           jvAssert: Option[(Boolean, Boolean)],
-                           defaultDraftUrl: Option[String]): Spec = {
+                           jvAssert: Option[(Boolean, Boolean)] = None,
+                           defaultDraftUrl: Option[String] = None): Spec = {
     if (!root.isObject) throw SpecError("#", "spec root must be an object")
     root.fieldNames().asScala.foreach { k =>
       if (!topKeywords.contains(k)) throw SpecError("#", s"unknown top-level keyword '$k'")

@@ -166,18 +166,19 @@ object TableChecks {
     * No partition-less window anywhere: with l_extendedprice-like near-unique
     * columns the old global `Window.orderBy(v)` moved every distinct value to
     * ONE task — at 100× scale, one executor sorting 10^8+ rows.
+    *
+    * Cache contract (as for the `graft.pipeline` operators): the ranged
+    * per-value frame behind the lazy result is a plain
+    * `persist(MEMORY_AND_DISK)` SQL cache entry, and no handle to it is
+    * returned. The caller frees it with `spark.catalog.clearCache()`;
+    * long-lived drivers issuing many KS checks should prefer the eager
+    * [[ksTwoSample]], which releases it after its action.
     */
   def ksTwoSampleDf(a: DataFrame, aCol: String, b: DataFrame, bCol: String): DataFrame =
     ksTwoSampleInternal(a, aCol, b, bCol)._1
 
-  /** Returns (lazy 1-row result, the correctness-required persisted
-    * intermediate). The CACHE LIFETIME contract (cf. Dedup.maybePersist):
-    * [[ksTwoSampleDf]] leaves the intermediate pinned until session end —
-    * callers running many KS checks in a long-lived driver should prefer the
-    * eager [[ksTwoSample]], which unpersists after its action, or unpersist
-    * via this variant themselves.
-    */
-  def ksTwoSampleInternal(a: DataFrame, aCol: String, b: DataFrame, bCol: String)
+  /** (lazy 1-row result, the correctness-required persisted intermediate). */
+  private def ksTwoSampleInternal(a: DataFrame, aCol: String, b: DataFrame, bCol: String)
       : (DataFrame, DataFrame) = {
     val av = a.select(col(aCol).cast("double").as("v")).filter(col("v").isNotNull)
     val bv = b.select(col(bCol).cast("double").as("v")).filter(col("v").isNotNull)

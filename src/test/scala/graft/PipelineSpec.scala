@@ -183,6 +183,27 @@ class PipelineSpec extends SparkTestBase {
       s"banded-only: ${banded.diff(brute).take(3)}; missed: ${brute.diff(banded).take(3)}")
   }
 
+  test("simhash64 and a filter over its code and bands compile in whole-stage codegen") {
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      // with fallback off, a generated method over the JVM's 64 KB limit
+      // fails the query instead of running the interpreted path
+      val sig = Dedup.simhash64(docs, "doc_id", "text")
+      // simhashNearDup64 leaves this frame cached; the filter must run over
+      // the aggregate itself, not over a cache scan
+      sig.unpersist()
+      assert(sig.count() == docs.filter($"text".isNotNull).count())
+      // band k is bits 16k..16k+15 of the code
+      val unsliced = sig.filter((0 until 4).map { k =>
+        shiftright($"simhash", 16 * k).bitwiseAND(lit(0xFFFFL)) =!=
+          col(s"band$k").cast("long")
+      }.reduce(_ || _))
+      assert(unsliced.count() == 0)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("deterministic sampling: exact per-stratum counts, append-stable hash membership") {
     import graft.pipeline.Sampling
     val s = Sampling.stratifiedExact(docs, "lang", "doc_id", 3)
@@ -205,12 +226,13 @@ class PipelineSpec extends SparkTestBase {
 
   test("stratifiedExactScaled ≡ stratifiedExact (same rows, no full-stratum sort)") {
     import graft.pipeline.Sampling
-    // plan shape FIRST (before any persisted run seeds the cache manager):
-    // the window's input must be the threshold-FILTERED frame, not the raw
-    // stratum — the full scan must never feed a per-stratum sort
-    val probe = Sampling.stratifiedExactScaled(docs, "lang", "doc_id", 3,
-      storage = org.apache.spark.storage.StorageLevel.NONE)
+    // plan shape FIRST (before any other persisted run seeds the cache
+    // manager): the window's input must be the threshold-FILTERED frame, not
+    // the raw stratum — the full scan must never feed a per-stratum sort.
+    // The result is persisted, so its InMemoryRelation prints the cached plan
+    val probe = Sampling.stratifiedExactScaled(docs, "lang", "doc_id", 3)
     val plan = probe.queryExecution.executedPlan.toString
+    probe.unpersist()
     val winIdx = plan.indexOf("Window")
     val filterIdx = plan.indexOf("< __graft_thr")
     assert(winIdx >= 0 && filterIdx > winIdx,

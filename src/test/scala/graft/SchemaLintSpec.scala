@@ -413,6 +413,30 @@ class SchemaLintSpec extends SparkTestBase {
       m2020).collect()) > 0)
   }
 
+  test("a second catalog lint leaves the first one's node frame cached") {
+    import spark.implicits._
+    // each catalog mixes 2020-12 documents with a draft-4 `id` resource, so
+    // more than one draft branch is planned and the node frame is persisted
+    def catalog(tag: String) = (0 until 6).map { i =>
+      val n = if (i % 2 == 0) "true" else "\"yes\""
+      (s"$tag$i", s"""{"$$defs": {"old": {"id": "urn:graft:$tag$i",
+         |  "$$schema": "http://json-schema.org/draft-04/schema#",
+         |  "properties": {"n": {"minimum": 3, "exclusiveMinimum": $n}}}},
+         |  "minLength": $i}""".stripMargin)
+    }.toDF("id", "schema_json")
+    def verdicts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    def expected(tag: String) = (0 until 6).map(i => s"$tag$i" -> (i % 2 == 0)).toMap
+    val a = SchemaLint.verdictsForCatalog(catalog("a"), "id", "schema_json", m2020)
+    val b = SchemaLint.verdictsForCatalog(catalog("b"), "id", "schema_json", m2020)
+    val before = SchemaLint.enumCalls.get()
+    assert(verdicts(a) == expected("a"))
+    val walks = SchemaLint.enumCalls.get() - before
+    assert(walks == 0, s"linting catalog B freed A's node frame: A walked $walks documents again")
+    assert(verdicts(b) == expected("b"))
+    spark.catalog.clearCache()
+  }
+
   test("eight threads linting at once get the sequential results") {
     val docs = Vector(("""{"type": 123, "properties": {"a": {"not": 3}}}""", m2020),
       ("""{"$recursiveAnchor": true, "minLength": -2}""", m2019),
