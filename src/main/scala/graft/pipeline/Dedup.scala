@@ -25,7 +25,8 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *    fingerprints (boilerplate docs) pre-aggregate per task.
   *
   * Cache contract: an operator's intermediate frames (shingles, bands,
-  * signatures, the connected-components result) are plain
+  * signatures) and two results, the pair frame of [[jaccardPairsLsh]] and
+  * the labels of [[connectedComponents]], are plain
   * `persist(MEMORY_AND_DISK)` SQL cache entries, so the expensive scan pass
   * runs once per call instead of once per consumer. The operator holds no
   * handle to them and takes no storage option: the caller frees them with
@@ -142,14 +143,19 @@ object Dedup {
     * before the size filter can drop it — a degenerate mega-bucket would
     * OOM an executor where the count-first shape drops it having only
     * ever counted. The valve's memory guarantee is worth the exchanges.)
+    *
+    * The valve is one left-semi join on the `x` side: `y` shares `x`'s
+    * (band, h), so its bucket has already passed and `y` reads the band
+    * index directly. A semi join always builds its right side, so AQE has
+    * no build side to pick by stage finishing order.
     */
   private def candidatesFromBands(bands: DataFrame, keyCol: String,
                                   maxBucket: Long): DataFrame = {
     val bucketSizes = bands.groupBy("band", "h").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1 && col("n") <= maxBucket)
       .select("band", "h")
-    val inBuckets = bands.join(bucketSizes, Seq("band", "h"))
-    inBuckets.as("x").join(inBuckets.as("y"),
+    val inBuckets = bands.join(bucketSizes, Seq("band", "h"), "left_semi")
+    inBuckets.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
           col(s"x.$keyCol") < col(s"y.$keyCol"))
       .select(col(s"x.$keyCol").as("a"), col(s"y.$keyCol").as("b"))
@@ -239,6 +245,11 @@ object Dedup {
     * computed from the per-doc shingle sets. Pairs missed by every band are
     * the LSH recall tradeoff (recall rises with numBands); every emitted
     * score is exact.
+    *
+    * The verified pairs come back as a `persist(MEMORY_AND_DISK)` SQL cache
+    * entry (see the cache contract above), so collecting them and passing
+    * them to [[dedupGroups]] reads one materialization instead of running
+    * the candidate and verify plan twice.
     */
   def jaccardPairsLsh(df: DataFrame, keyCol: String, textCol: String,
                       shingleN: Int = 3, threshold: Double = 0.5,
@@ -281,6 +292,7 @@ object Dedup {
       // never emitted even under threshold ≤ 0
       .filter(col("inter") > 0 && col("jaccard") >= threshold)
       .select("a", "b", "jaccard")
+      .persist(MEMORY_AND_DISK)
   }
 
   /** Companion to [[jaccardPairs]]'s skew valve: the stop-shingles it drops
@@ -402,8 +414,9 @@ object Dedup {
     val okBuckets = exploded.groupBy("band", "bv").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1 && col("n") <= maxBucket)
       .select("band", "bv")
-    val inB = exploded.join(okBuckets, Seq("band", "bv"))
-    inB.as("x").join(inB.as("y"),
+    // one semi-join valve, as in candidatesFromBands: `y` shares `x`'s bucket
+    val inB = exploded.join(okBuckets, Seq("band", "bv"), "left_semi")
+    inB.as("x").join(exploded.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
           col("x.k") < col("y.k"))
       .select(col("x.k").as("a"), col("y.k").as("b"),
@@ -487,15 +500,15 @@ object Dedup {
     * groupBy's self-join: four new loaders through the bare `toRdd`, none
     * through `Dataset.rdd` (which the edge pass uses) or `count()`.
     *
-    * The edge pass computes `pairs` once; a caller that also collects the
-    * pairs should persist them. Keys must be integral (tinyint to bigint —
-    * anything else throws at call time); id and comp take the wider of the
-    * two key types and their nullability, and a pair with a null end joins
-    * nothing. Every RDD the call persists (at MEMORY_AND_DISK: a round's
-    * lineage ends at its checkpoint and the result's at the last round's,
-    * so an evicted block could not recompute) is unpersisted before it
-    * returns or throws; the result comes back as a MEMORY_AND_DISK SQL
-    * cache entry, so `unpersist` or `clearCache()` frees it.
+    * The edge pass computes `pairs` once. Keys must be integral (tinyint
+    * to bigint — anything else throws at call time); id and comp take the
+    * wider of the two key types and their nullability, and a pair with a
+    * null end joins nothing. Every RDD the call persists (at
+    * MEMORY_AND_DISK: a round's lineage ends at its checkpoint and the
+    * result's at the last round's, so an evicted block could not
+    * recompute) is unpersisted before it returns or throws; the result
+    * comes back as a MEMORY_AND_DISK SQL cache entry, so `unpersist` or
+    * `clearCache()` frees it.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
     connectedComponentsWithRounds(pairs, maxIter)._1

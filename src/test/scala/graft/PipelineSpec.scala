@@ -161,6 +161,37 @@ class PipelineSpec extends SparkTestBase {
     assert(jac.subsetOf(candFast), s"missing: ${jac.diff(candFast).take(3)}")
   }
 
+  test("minhash maxBucket valve: candidates = count-first reference, mega-buckets = the dropped ones") {
+    // six copies of one text fill every band's bucket past maxBucket = 4;
+    // four copies of another fill theirs exactly to it (kept)
+    val planted = (0 until 6).map(i => (100000L + i, "one planted text six times over")) ++
+      (0 until 4).map(i => (200000L + i, "another planted text four times"))
+    val corpus = docs.select("doc_id", "text").union(planted.toDF("doc_id", "text"))
+    val maxBucket = 4L
+    val buckets = Dedup.minhashBands(corpus, "doc_id", "text", numBands = 8).collect()
+      .groupBy(r => (r.getInt(1), r.getString(2))).view
+      .mapValues(_.map(_.getLong(0)).toSeq).toMap
+    // a null band value joins nothing (equi-join), but it is still a bucket
+    val kept = buckets.collect {
+      case ((_, h), ks) if h != null && ks.size > 1 && ks.size <= maxBucket => ks
+    }
+    val expected = kept.flatMap(ks => for (a <- ks; b <- ks if a < b) yield (a, b)).toSet
+    val dropped = buckets.collect {
+      case ((band, h), ks) if ks.size > maxBucket => (band, h, ks.size.toLong)
+    }.toSet
+    val cand = Dedup.minhashCandidates(corpus, "doc_id", "text", maxBucket = maxBucket)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (extra, missed) = (cand.diff(expected), expected.diff(cand))
+    assert(extra.isEmpty && missed.isEmpty, s"extra: ${extra.take(3)}; missed: ${missed.take(3)}")
+    assert(!cand.contains((100000L, 100001L)), "a pair only a mega-bucket holds was kept")
+    assert(cand.contains((200000L, 200001L)), "a bucket of exactly maxBucket was dropped")
+    val mega = Dedup.minhashMegaBuckets(corpus, "doc_id", "text", maxBucket = maxBucket)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+    assert(mega == dropped)
+    assert(dropped.size >= 8, s"the six copies must overflow all 8 bands: $dropped")
+    spark.catalog.clearCache()
+  }
+
   test("simhash64 banded join = exact all-pairs Hamming<=3 (recall + precision)") {
     val sig = Dedup.simhash64(docs, "doc_id", "text")
     // band packing is consistent with the packed code (shift+mask — ANSI
@@ -378,9 +409,37 @@ class PipelineSpec extends SparkTestBase {
     Dedup.connectedComponents(path).collect()
     spark.catalog.clearCache()
     assert(left.isEmpty, s"still persisted after clearCache(): $left")
+    // the pair step's cached pairs and intermediates go with clearCache() too
+    val pairs = Dedup.jaccardPairsLsh(
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "doc_id", "text")
+    pairs.collect()
+    Dedup.dedupGroups(pairs).collect()
+    spark.catalog.clearCache()
+    assert(left.isEmpty, s"still persisted after the pair step and clearCache(): $left")
     // one round cannot label a 200-node path: the call throws
     intercept[IllegalStateException](Dedup.connectedComponents(path, maxIter = 1))
     assert(left.isEmpty, s"still persisted after a failed call: $left")
+  }
+
+  test("dedupGroups over collected jaccardPairsLsh pairs reads their cache, not the candidate join") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val pairs = Dedup.jaccardPairsLsh(
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), "doc_id", "text")
+    val rows = pairs.collect()
+    assert(rows.nonEmpty)
+    val cached = pairs.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+    assert(cached.nonEmpty && cached.forall(_.cacheBuilder.isCachedColumnBuffersLoaded),
+      "the collected pairs are not a loaded cache entry")
+    // the same pairs as a local relation: any job beyond its count is a
+    // recomputation of the candidate and verify plan
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), pairs.schema)
+    var viaLocal: Map[Long, Long] = null
+    var viaCache: Map[Long, Long] = null
+    val localJobs = jobsStarted { viaLocal = components(Dedup.dedupGroups(local)) }
+    val cacheJobs = jobsStarted { viaCache = components(Dedup.dedupGroups(pairs)) }
+    assert(cacheJobs == localJobs, s"$cacheJobs jobs over the cached pairs, $localJobs over local ones")
+    assert(viaCache == viaLocal)
+    spark.catalog.clearCache()
   }
 
   test("connected components: a repeat call over fresh pairs compiles no generated code") {
